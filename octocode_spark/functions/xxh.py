@@ -69,43 +69,3 @@ def xxhash64_ints(*values: int, seed: int = 42) -> int:
         h = _hash_int(v, h)
     return _to_signed(h)
 
-
-# ---------------------------------------------------------------- murmur3
-# Spark's Murmur3Hash expression (F.hash / HashPartitioning) over a single
-# LongType column: Murmur3_x86_32.hashLong(value, seed=42). Public algorithm
-# (Austin Appleby, public domain). Used to compute hash-partitioner preimage
-# labels on the driver without a Spark job.
-
-_C1 = 0xCC9E2D51
-_C2 = 0x1B873593
-_M32 = 0xFFFFFFFF
-
-
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def _mix_k1(k1: int) -> int:
-    k1 = (k1 * _C1) & _M32
-    k1 = _rotl32(k1, 15)
-    return (k1 * _C2) & _M32
-
-
-def _mix_h1(h1: int, k1: int) -> int:
-    h1 ^= k1
-    h1 = _rotl32(h1, 13)
-    return (h1 * 5 + 0xE6546B64) & _M32
-
-
-def murmur3_long(value: int, seed: int = 42) -> int:
-    """Spark ``F.hash(lit(v).cast('long'))`` — signed 32-bit out."""
-    v = value & ((1 << 64) - 1)
-    h1 = _mix_h1(seed & _M32, _mix_k1(v & _M32))
-    h1 = _mix_h1(h1, _mix_k1((v >> 32) & _M32))
-    h1 ^= 8
-    h1 ^= h1 >> 16
-    h1 = (h1 * 0x85EBCA6B) & _M32
-    h1 ^= h1 >> 13
-    h1 = (h1 * 0xC2B2AE35) & _M32
-    h1 ^= h1 >> 16
-    return h1 - (1 << 32) if h1 >= (1 << 31) else h1

@@ -17,6 +17,13 @@ transitions, (c) the commit critical section stays O(one partition's files)
 even when the table has 10^12 rows. Partitions are processed in descending
 byte size (longest-pole-first) — at 1000 executors the scheduler fills the
 tail with small partitions.
+
+One rewrite body, ``_rewrite_group``: read a group of planned partitions
+once, range-shuffle them on (partition columns, curve key) — or coalesce when
+not clustering — write once, commit per partition. ``rewrite_global`` runs it
+once over the whole plan; ``rewrite_partitions`` once per partition,
+sequentially or on a thread pool; ``full_maintenance`` picks between the two
+by the share of table bytes the plan covers.
 """
 
 from __future__ import annotations
@@ -28,8 +35,6 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from octocode_spark.functions.zorder import with_cluster_key
 from octocode_spark.lakehouse.ledger import Ledger
@@ -37,11 +42,6 @@ from octocode_spark.lakehouse.metadata import DataFile
 from octocode_spark.lakehouse.table import LakeTable, partition_key
 
 TARGET_FILE_SIZE = 512 * 1024 * 1024  # north-star 512MB bin-pack target
-
-# rewrite_global assign="auto" crossover: below this, repartitionByRange's
-# second scan of the (page-cached) input is cheaper than the routed mode's
-# fixed sampling prologue; above it, re-reading the table dominates
-ROUTES_MIN_BYTES = 16 * 1024 * 1024 * 1024
 
 
 @dataclass
@@ -141,6 +141,93 @@ class RewriteResult:
     phases: dict = field(default_factory=dict)  # per-phase seconds (bench attribution)
 
 
+def _resume(table: LakeTable, plan: CompactionPlan, ledger: Ledger | None,
+            op: str) -> tuple[list[PartitionPlan], RewriteResult]:
+    """Split the plan into partitions still to rewrite and an empty result
+    listing the skipped ones. A partition is skipped when its ledger row is
+    `done` AND its commit_id is still in the snapshot log (lineage-validated
+    replay, C6)."""
+    valid_ids = {s.snapshot_id for s in table.meta.snapshots}
+    done = ledger.done_partitions(op, valid_ids) if ledger else set()
+    res = RewriteResult([], [p.key for p in plan.partitions if p.key in done], 0, 0, 0, 0, 0.0, [])
+    return [p for p in plan.partitions if p.key not in done], res
+
+
+def _rewrite_group(
+    spark: SparkSession,
+    table: LakeTable,
+    group: list[PartitionPlan],
+    ledger: Ledger | None,
+    op: str,
+    cluster_by: str | None,
+    res: RewriteResult,
+    lock: threading.Lock,
+) -> dict:
+    """Rewrite a group of planned partitions with ONE read + ONE write, then
+    commit each partition as its own atomic snapshot, ledger row written ONLY
+    after the snapshot commits (C3 write ordering). Adds the group's counts
+    to ``res`` under ``lock``; returns the per-phase seconds."""
+    if ledger:
+        for p in group:
+            ledger.mark_pending(op, p.key)
+    # capture the sidecar set the scan below will bake in: a MoR delete
+    # committing between here and replace_files must CONFLICT, not be
+    # silently resurrected (validateNoNewDeleteFiles, _commit docstring)
+    planned_sidecars = table.delete_files()
+    df = table.read_files(spark, [f for p in group for f in p.inputs], delete_files=planned_sidecars)
+    n_out = sum(p.target_files for p in group)
+    if cluster_by:
+        # one balanced range exchange over (partition, curve key) → disjoint
+        # per-file key ranges → tight min/max stats → manifest file-skipping
+        # works, and a Zipf-hot partition spreads over its share of reducers.
+        # repartitionByRange SAMPLES its child to pick bounds, so the scan +
+        # curve key run twice. Measured: recomputing costs ~1/8th of caching
+        # (columnar cache materialization of wide token rows is far more
+        # expensive than a parquet re-scan), so we deliberately do NOT persist.
+        part_cols = table.meta.partition_by
+        df = (
+            with_cluster_key(df, curve=cluster_by)
+            .repartitionByRange(n_out, *part_cols, "_zkey")
+            .sortWithinPartitions(*part_cols, "_zkey")
+            .drop("_zkey")
+        )
+    else:
+        # pure bin-pack (no re-cluster): coalesce merges small files with
+        # NO shuffle — round-robin repartition would pay both a full
+        # shuffle and Spark's sort-before-repartition on fat token rows
+        df = df.coalesce(n_out)
+    added, phases = table._write_datafiles_timed(df)
+
+    t_c0 = time.monotonic()
+    added_by_part: dict[str, list[DataFile]] = {}
+    for f in added:
+        added_by_part.setdefault(partition_key(f.partition), []).append(f)
+    known = {f.path for f in planned_sidecars}
+    for p in group:
+        new_files = added_by_part.pop(p.key, [])
+        snap = table.replace_files(
+            [f.path for f in p.inputs],
+            new_files,
+            operation=op,
+            summary={"partition": p.key, "reason": p.reason, "cluster": cluster_by or "none"},
+            known_sidecars=known,
+        )
+        if ledger:
+            ledger.mark_done(op, p.key, len(p.inputs), p.bytes, p.records, snap.snapshot_id)
+        with lock:
+            res.partitions_done.append(p.key)
+            res.files_in += len(p.inputs)
+            res.files_out += len(new_files)
+            res.bytes_in += p.bytes
+            res.rows += p.records
+            res.snapshots.append(snap.snapshot_id)
+    if added_by_part:  # outputs for partitions not in the group: impossible by
+        # construction (inputs came only from group partitions), fail loudly
+        raise RuntimeError(f"unplanned output partitions: {sorted(added_by_part)}")
+    phases["commit_s"] = round(time.monotonic() - t_c0, 3)
+    return phases
+
+
 def rewrite_partitions(
     spark: SparkSession,
     table: LakeTable,
@@ -152,11 +239,8 @@ def rewrite_partitions(
     fail_after: int | None = None,  # test hook: simulate a kill after k partitions
     max_concurrency: int = 1,
 ) -> RewriteResult:
-    """Execute the plan partition-by-partition, one atomic snapshot each,
-    ledger row written ONLY after the snapshot commits (C3 write ordering).
-
-    Resume: partitions whose ledger row is `done` AND whose commit_id is
-    still in the snapshot log are skipped (lineage-validated replay, C6).
+    """Incremental mode: one ``_rewrite_group`` job per planned partition, so
+    a killed job loses at most the partitions in flight.
 
     ``max_concurrency`` > 1 runs partition rewrites as concurrent Spark jobs
     (Iceberg's rewrite action does the same with file groups): the scheduler
@@ -164,167 +248,23 @@ def rewrite_partitions(
     longer leaves the cluster idle while a big one sorts. Commits stay safe —
     the plans touch disjoint files and the metadata CAS serializes them.
     """
-    valid_ids = {s.snapshot_id for s in table.meta.snapshots}
-    done_before = ledger.done_partitions(op, valid_ids) if ledger else set()
-
-    res = RewriteResult([], [], 0, 0, 0, 0, 0.0, [])
+    todo, res = _resume(table, plan, ledger, op)
     lock = threading.Lock()
     t0 = time.monotonic()
-    completed = 0
 
     def run_one(p: PartitionPlan) -> None:
-        if ledger:
-            ledger.mark_pending(op, p.key)
-        # capture the sidecar set the scan below will bake in: a MoR delete
-        # committing between here and replace_files must CONFLICT, not be
-        # silently resurrected (validateNoNewDeleteFiles, _commit docstring)
-        planned_sidecars = table.delete_files()
-        df = table.read_files(spark, p.inputs, delete_files=planned_sidecars)
-        if cluster_by:
-            # range-partition on the curve key → disjoint per-file key ranges
-            # → tight min/max stats → manifest file-skipping actually works.
-            # repartitionByRange SAMPLES its child to pick bounds, so the
-            # scan + curve UDF run twice. Measured: recomputing costs ~1/8th
-            # of caching (columnar cache materialization of wide token rows
-            # is far more expensive than a parquet re-scan + numpy kernel),
-            # so we deliberately do NOT persist here.
-            df = (
-                with_cluster_key(df, curve=cluster_by)
-                .repartitionByRange(p.target_files, "_zkey")
-                .sortWithinPartitions("_zkey")
-                .drop("_zkey")
-            )
-        else:
-            # pure bin-pack (no re-cluster): coalesce merges small files with
-            # NO shuffle — round-robin repartition would pay both a full
-            # shuffle and Spark's sort-before-repartition on fat token rows
-            df = df.coalesce(p.target_files)
-        added = table._write_datafiles(df)
-        snap = table.replace_files(
-            [f.path for f in p.inputs],
-            added,
-            operation=op,
-            summary={"partition": p.key, "reason": p.reason, "cluster": cluster_by or "none"},
-            known_sidecars={f.path for f in planned_sidecars},
-        )
-        if ledger:
-            ledger.mark_done(op, p.key, len(p.inputs), p.bytes, p.records, snap.snapshot_id)
-        with lock:
-            res.partitions_done.append(p.key)
-            res.files_in += len(p.inputs)
-            res.files_out += len(added)
-            res.bytes_in += p.bytes
-            res.rows += p.records
-            res.snapshots.append(snap.snapshot_id)
-
-    todo: list[PartitionPlan] = []
-    for p in plan.partitions:
-        if p.key in done_before:
-            res.partitions_skipped.append(p.key)
-        else:
-            todo.append(p)
+        _rewrite_group(spark, table, [p], ledger, op, cluster_by, res, lock)
 
     if max_concurrency <= 1 or fail_after is not None:
-        for p in todo:
+        for completed, p in enumerate(todo):
             if fail_after is not None and completed >= fail_after:
                 raise RuntimeError(f"simulated kill after {completed} partitions")
             run_one(p)
-            completed += 1
     else:
         with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            futures = [pool.submit(run_one, p) for p in todo]
-            for f in futures:
-                f.result()
+            list(pool.map(run_one, todo))
     res.seconds = time.monotonic() - t0
     return res
-
-
-def _reducer_labels(n: int) -> list[int]:
-    """For each reducer i < n, a long x with pmod(murmur3(x), n) == i — so
-    ``repartition(n, route)`` places bucket i on EXACTLY reducer i. Computed
-    on the driver with the pure-python Murmur3 twin of Spark's HashPartitioning
-    expression (bit-equality pinned by test) — no Spark job, O(n·ln n) hashes."""
-    import math
-
-    from octocode_spark.functions.xxh import murmur3_long
-
-    m: dict[int, int] = {}
-    x = 0
-    # coupon collector needs ~n(ln n + γ) probes; give 4× headroom so even
-    # 10^5-output-file plans (the design scale) complete with margin
-    limit = max(1_000_000, 4 * int(n * (math.log(n) + 1)))
-    while len(m) < n:
-        p = murmur3_long(x) % n  # python % is already the nonneg pmod
-        if p not in m:
-            m[p] = x
-        x += 1
-        if x > limit:
-            raise RuntimeError(f"reducer label search incomplete: {len(m)}/{n}")
-    return [m[i] for i in range(n)]
-
-
-def _sample_bucket_cuts(
-    spark: SparkSession,
-    table: LakeTable,
-    todo: list[PartitionPlan],
-    cluster_by: str,
-    samples_per_file: int = 256,
-) -> list[tuple[PartitionPlan, int, list[int]]]:
-    """Per plan-partition zkey cut points from a COLUMN-PRUNED deterministic
-    sample — the RangePartitioner's job, without re-executing the fat scan.
-
-    The cluster key reads only (source, n_tok, doc_id); tokens — ~99% of the
-    row bytes — are never decoded here. Returns (plan, bucket_offset, cuts)
-    with offsets allocated in plan order."""
-    part_cols = table.meta.partition_by
-    need = sorted({*part_cols, "source", "n_tok", "doc_id"})
-    all_inputs = [f for p in todo for f in p.inputs]
-    # PER-PARTITION sample rate: a single global rate undersamples fat-row
-    # partitions (few rows per byte ⇒ fewer samples than target_files ⇒ the
-    # whole partition would collapse to one bucket/one straggler file)
-    def _thr(p: PartitionPlan) -> int:
-        return int(min(1.0, samples_per_file * p.target_files / max(p.records, 1)) * 1_000_000)
-
-    thr = None
-    for p in todo:
-        cond = None
-        for c in part_cols:
-            eq = F.col(c).cast("string") == F.lit(str(p.partition.get(c)))
-            cond = eq if cond is None else cond & eq
-        if cond is None:  # unpartitioned: one plan group
-            thr = F.lit(_thr(p))
-        else:
-            thr = F.when(cond, _thr(p)) if thr is None else thr.when(cond, _thr(p))
-    if part_cols and thr is not None:
-        thr = thr.otherwise(F.lit(0))
-    # coalesce: the narrow scan of a 1000-file table would otherwise schedule
-    # one task per split for ~1% of the bytes — merge to core-count tasks so
-    # the sampling pass is dominated by IO, not scheduling (it is the serial
-    # prologue of the rewrite; every saved second feeds the scaling ratio)
-    narrow = (
-        table.read_files(spark, all_inputs)
-        .select(*need)
-        .coalesce(max(spark.sparkContext.defaultParallelism, 8))
-    )
-    sampled = (
-        with_cluster_key(narrow, curve=cluster_by)
-        .filter(F.pmod(F.xxhash64(F.col("doc_id"), F.lit(777)), F.lit(1_000_000)) < thr)
-        .select(*part_cols, "_zkey")
-        .collect()
-    )
-    by_part: dict[tuple, list[int]] = {}
-    for r in sampled:
-        by_part.setdefault(tuple(str(r[c]) for c in part_cols), []).append(r["_zkey"])
-    out: list[tuple[PartitionPlan, int, list[int]]] = []
-    offset = 0
-    for p in todo:
-        key = tuple(str(p.partition.get(c)) for c in part_cols)
-        zs = sorted(by_part.get(key, []))
-        k = p.target_files
-        cuts = [zs[(j * len(zs)) // k] for j in range(1, k)] if len(zs) >= k else []
-        out.append((p, offset, cuts))
-        offset += max(len(cuts) + 1, 1)
-    return out
 
 
 def rewrite_global(
@@ -334,176 +274,26 @@ def rewrite_global(
     ledger: Ledger | None = None,
     op: str = "compact",
     cluster_by: str | None = "zorder",
-    samples_per_file: int = 256,
-    assign: str = "auto",  # auto | routes | range
 ) -> RewriteResult:
-    """Throughput mode: ONE scan + ONE shuffle over every planned partition,
-    then per-partition atomic commits assembled from the grouped output files.
+    """Throughput mode: ONE ``_rewrite_group`` over every planned partition —
+    one read and one range shuffle, then per-partition atomic commits.
 
     vs rewrite_partitions (incremental mode): no per-partition job overhead
     and full-cluster parallelism on one shuffle — the right shape when most
     of the table needs rewriting (initial cluster, major compaction). Commit
     + ledger granularity is unchanged (still per partition); what coarsens is
     compute-resume: a kill before the write finishes replays the whole job.
-
-    Range assignment (``assign``):
-    - "routes": zkey cut points from a column-pruned deterministic sample
-      (tokens never decoded), each (partition, zkey-range) bucket routed to
-      EXACTLY one reducer via murmur preimage labels — ONE scan of the fat
-      table, exact output geometry (no straddle splits).
-    - "range": plain ``repartitionByRange`` — whose bounds-sampling pass
-      re-executes the fat child, i.e. reads the table twice.
-    - "auto" (default): "range" below ROUTES_MIN_BYTES, "routes" above.
-      Measured crossover: the routes sampling prologue is a fixed ~2s
-      (narrow scan + driver cuts), while the second scan that "range" pays
-      is proportional to table bytes — cheap for a page-cached few-GB
-      rewrite, catastrophic at 100 TB where it doubles the job's read IO.
     """
-    valid_ids = {s.snapshot_id for s in table.meta.snapshots}
-    done_before = ledger.done_partitions(op, valid_ids) if ledger else set()
-    todo = [p for p in plan.partitions if p.key not in done_before]
-    res = RewriteResult([], [p.key for p in plan.partitions if p.key in done_before],
-                        0, 0, 0, 0, 0.0, [])
-    if not todo:
-        return res
-    t0 = time.monotonic()
-    if ledger:
-        for p in todo:
-            ledger.mark_pending(op, p.key)
-    all_inputs = [f for p in todo for f in p.inputs]
-    part_cols = table.meta.partition_by
     if not cluster_by:
         raise ValueError(
             "rewrite_global is the clustering path; pure bin-packing is a "
             "per-partition coalesce — use rewrite_partitions(cluster_by=None)"
         )
-
-    # capture the sidecar set the scans below bake in (validateNoNewDeleteFiles)
-    planned_sidecars = table.delete_files()
-    known = {f.path for f in planned_sidecars}
-    if assign == "auto":
-        todo_bytes = sum(p.bytes for p in todo)  # the bytes actually scanned
-        assign = "range" if todo_bytes < ROUTES_MIN_BYTES else "routes"
-    if assign == "range":
-        total_target = sum(p.target_files for p in todo)
-        df = (
-            with_cluster_key(
-                table.read_files(spark, all_inputs, delete_files=planned_sidecars),
-                curve=cluster_by,
-            )
-            .repartitionByRange(total_target, *part_cols, "_zkey")
-            .sortWithinPartitions(*part_cols, "_zkey")
-            .drop("_zkey")
-        )
-        added = table._write_datafiles(df)
-        res.phases.update(getattr(table, "last_write_phases", {}))
-        return _commit_global(table, todo, added, ledger, op, cluster_by, res, t0, known)
-
-    t_s0 = time.monotonic()
-    routed = _sample_bucket_cuts(spark, table, todo, cluster_by, samples_per_file)
-    res.phases["sample_s"] = round(time.monotonic() - t_s0, 3)
-    n_buckets = sum(max(len(cuts) + 1, 1) for _, _, cuts in routed)
-    labels = _reducer_labels(n_buckets)
-
-    keyed = with_cluster_key(
-        table.read_files(spark, all_inputs, delete_files=planned_sidecars),
-        curve=cluster_by,
-    )
-    routed_df = _route_rows(spark, keyed, routed, part_cols, labels)
-    df = (
-        routed_df
-        .repartition(n_buckets, "_route")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey", "_route")
-    )
-    added = table._write_datafiles(df)
-    res.phases.update(getattr(table, "last_write_phases", {}))
-    return _commit_global(table, todo, added, ledger, op, cluster_by, res, t0, known)
-
-
-def _route_rows(
-    spark: SparkSession,
-    keyed,  # DataFrame carrying part_cols + _zkey
-    routed: list[tuple[PartitionPlan, int, list[int]]],
-    part_cols: list[str],
-    labels: list[int],
-):
-    """Attach the reducer-routing column — O(1) PLAN SIZE (round-4 verdict
-    wrong #3): the per-partition cut points and reducer labels ride in a
-    SMALL broadcast-joined DataFrame — (partition key strings, cuts array,
-    that partition's label slice) — instead of a literal when-chain +
-    per-partition F.array literals, whose ~10-node-per-partition expression
-    tree made Catalyst analysis time and driver memory the bottleneck at
-    10k-partition scale. Same semantics: local bucket = #cuts below _zkey
-    (aggregate over the joined cuts column), route = labels[local]."""
-    routes_rows = []
-    for p, offset, cuts in routed:
-        routes_rows.append(
-            tuple(str(p.partition.get(c)) for c in part_cols)
-            + ([int(x) for x in cuts], [int(x) for x in labels[offset:offset + len(cuts) + 1]])
-        )
-    key_cols = [f"__pk_{c}" for c in part_cols]
-    routes_schema = T.StructType(
-        [T.StructField(k, T.StringType(), False) for k in key_cols]
-        + [
-            T.StructField("_cuts", T.ArrayType(T.LongType(), False), False),
-            T.StructField("_labels", T.ArrayType(T.LongType(), False), False),
-        ]
-    )
-    routes = F.broadcast(spark.createDataFrame(routes_rows, routes_schema))
-    if part_cols:
-        cond = None
-        for c, k in zip(part_cols, key_cols):
-            eq = F.col(c).cast("string") == F.col(k)
-            cond = eq if cond is None else cond & eq
-        joined = keyed.join(routes, cond, "left")
-    else:  # unpartitioned: one routes row
-        joined = keyed.crossJoin(routes)
-    zc = F.col("_zkey")
-    local = F.aggregate(
-        F.col("_cuts"), F.lit(0),
-        lambda acc, cut: acc + F.when(zc > cut, 1).otherwise(0),
-    )
-    # rows outside every plan partition are impossible by construction
-    # (inputs come only from plan files); fail loudly if the invariant breaks
-    route = F.when(
-        F.col("_labels").isNull(),
-        F.raise_error(F.lit("rewrite_global: row outside every plan partition")).cast("long"),
-    ).otherwise(F.element_at(F.col("_labels"), local.cast("int") + F.lit(1)))
-    return joined.withColumn("_route", route).drop("_cuts", "_labels", *key_cols)
-
-
-def _commit_global(
-    table, todo, added, ledger, op, cluster_by, res, t0,
-    known_sidecars: set[str] | None = None,
-) -> RewriteResult:
-    """Per-partition atomic commits + ledger rows from one global write."""
-    t_c0 = time.monotonic()
-    added_by_part: dict[str, list[DataFile]] = {}
-    for f in added:
-        added_by_part.setdefault(partition_key(f.partition), []).append(f)
-    for p in todo:
-        new_files = added_by_part.pop(p.key, [])
-        snap = table.replace_files(
-            [f.path for f in p.inputs],
-            new_files,
-            operation=op,
-            summary={"partition": p.key, "reason": p.reason, "cluster": cluster_by or "none",
-                     "mode": "global"},
-            known_sidecars=known_sidecars,
-        )
-        if ledger:
-            ledger.mark_done(op, p.key, len(p.inputs), p.bytes, p.records, snap.snapshot_id)
-        res.partitions_done.append(p.key)
-        res.files_in += len(p.inputs)
-        res.files_out += len(new_files)
-        res.bytes_in += p.bytes
-        res.rows += p.records
-        res.snapshots.append(snap.snapshot_id)
-    if added_by_part:  # outputs for partitions not in the plan: impossible by
-        # construction (inputs came only from plan partitions), fail loudly
-        raise RuntimeError(f"unplanned output partitions: {sorted(added_by_part)}")
-    res.phases["commit_s"] = round(time.monotonic() - t_c0, 3)
+    todo, res = _resume(table, plan, ledger, op)
+    if not todo:
+        return res
+    t0 = time.monotonic()
+    res.phases = _rewrite_group(spark, table, todo, ledger, op, cluster_by, res, threading.Lock())
     res.seconds = time.monotonic() - t0
     return res
 

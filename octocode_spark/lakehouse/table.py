@@ -347,7 +347,15 @@ class LakeTable:
     # ------------------------------------------------------------------ write
     def _write_datafiles(self, df: DataFrame, sort_within: list[str] | None = None) -> list[DataFile]:
         """Run the Spark write job into staging, move files into data/,
-        harvest footer stats. Returns the new DataFiles (uncommitted).
+        harvest footer stats. Returns the new DataFiles (uncommitted)."""
+        return self._write_datafiles_timed(df, sort_within)[0]
+
+    def _write_datafiles_timed(
+        self, df: DataFrame, sort_within: list[str] | None = None
+    ) -> tuple[list[DataFile], dict[str, float]]:
+        """``_write_datafiles`` plus its per-phase seconds: write job vs
+        staging-move vs footer-stat harvest (benchmark attribution). Returned,
+        not stored on the table, so concurrent writers never see each other's.
 
         The stat harvest (per-file rows/bytes/min-max from parquet FOOTERS)
         runs as a Spark job over the file list when the commit adds more than
@@ -464,15 +472,12 @@ class LakeTable:
             DataFile(path=rel, partition=part, records=rec, bytes=size, stats=stats)
             for rel, part, rec, size, stats in payloads
         ]
-        # per-phase attribution for benchmarks: write job vs staging-move vs
-        # footer-stat harvest (overwritten on every write; read immediately
-        # after the call by the maintenance instrumentation)
-        self.last_write_phases = {
+        phases = {
             "write_s": round(t_w1 - t_w0, 3),
             "move_s": round(t_h0 - t_w1, 3),
             "harvest_s": round(time.monotonic() - t_h0, 3),
         }
-        return [f for f in dfiles if f.records > 0]
+        return [f for f in dfiles if f.records > 0], phases
 
     def _check_schema(self, df: DataFrame) -> None:
         """Fail loudly on writer-schema drift (the reference's policy: vector

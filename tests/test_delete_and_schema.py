@@ -140,12 +140,25 @@ def test_partially_dangling_sidecar_survives_prune(spark, tmp_table_dir):
     assert len(touched) > 1
     expect = t.read(spark).count()
 
-    # rewrite exactly ONE of the referenced files (CoW delete of one row in it)
-    by_name = {__import__("os").path.basename(f.path): f for f in t.files()}
-    one = by_name[sorted(touched)[0]]
+    # rewrite exactly ONE of the referenced files (CoW delete of one row in
+    # it), chosen by content, not by its random name: the most live rows,
+    # ties broken by the doc_id min stat
+    import collections
+    import os
+
+    import pyarrow.parquet as pq
+
+    dead = collections.Counter(
+        pq.read_table(os.path.join(t.root, t.delete_files()[0].path), columns=["file_name"])
+        .column("file_name").to_pylist()
+    )
+    referenced = [f for f in t.files() if os.path.basename(f.path) in touched]
+    one = min(referenced, key=lambda f: (dead[os.path.basename(f.path)] - f.records,
+                                         f.stats["doc_id"][0]))
     # pick a row in that file NOT already MoR-deleted
-    live_in_file = t.read_files(spark, [one]).select("doc_id").first()["doc_id"]
-    t.delete_where(spark, F.col("doc_id") == live_in_file)  # cow: rewrites `one` only
+    row = t.read_files(spark, [one]).select("doc_id").orderBy("doc_id").first()
+    assert row is not None, "the chosen file has no live row"
+    t.delete_where(spark, F.col("doc_id") == row["doc_id"])  # cow: rewrites `one` only
     expect -= 1
 
     assert prune_dangling_delete_sidecars(t) is None  # partially live -> kept

@@ -1,4 +1,6 @@
-"""Global-mode rewrite: one scan+shuffle, per-partition commits."""
+"""Clustered rewrite through both entry points — rewrite_global (one
+scan+shuffle over the plan) and rewrite_partitions (one job per partition,
+sequential or threaded) — with per-partition commits."""
 
 from __future__ import annotations
 
@@ -6,12 +8,23 @@ import pytest
 
 from octocode_spark.functions.digest import group_counts, table_digest
 from octocode_spark.lakehouse import Ledger
-from octocode_spark.lakehouse.maintenance import plan_compaction, rewrite_global
+from octocode_spark.lakehouse.maintenance import plan_compaction, rewrite_global, rewrite_partitions
 from tests.conftest import make_sequences_table
 
+# every way the engine runs a clustered rewrite: "range" is rewrite_global's
+# one range shuffle over the whole plan, which full_maintenance picks for
+# major compactions; "partitions_threaded" is its default for incremental
+# touch-ups (max_concurrency=4)
+ENTRY_POINTS = {
+    "range": lambda spark, t, plan, **kw: rewrite_global(spark, t, plan, cluster_by="zorder", **kw),
+    "partitions": lambda spark, t, plan, **kw: rewrite_partitions(spark, t, plan, cluster_by="zorder", **kw),
+    "partitions_threaded": lambda spark, t, plan, **kw: rewrite_partitions(
+        spark, t, plan, cluster_by="zorder", max_concurrency=4, **kw),
+}
 
-@pytest.mark.parametrize("assign", ["routes", "range"])
-def test_global_rewrite_preserves_data_and_commits_per_partition(spark, tmp_table_dir, tmp_path, assign):
+
+@pytest.mark.parametrize("entry", list(ENTRY_POINTS))
+def test_global_rewrite_preserves_data_and_commits_per_partition(spark, tmp_table_dir, tmp_path, entry):
     t = make_sequences_table(spark, tmp_table_dir, n_rows=3000, small_files=24)
     pre = table_digest(t.read(spark))
     pre_groups = {(r["source"], r["n_tok_bucket"]): r["cnt"] for r in group_counts(t.read(spark)).collect()}
@@ -19,7 +32,7 @@ def test_global_rewrite_preserves_data_and_commits_per_partition(spark, tmp_tabl
     plan = plan_compaction(t)
     n_parts = len(plan.partitions)
 
-    res = rewrite_global(spark, t, plan, ledger=ledger, cluster_by="zorder", assign=assign)
+    res = ENTRY_POINTS[entry](spark, t, plan, ledger=ledger)
     assert len(res.partitions_done) == n_parts
     assert len(res.snapshots) == n_parts  # one atomic snapshot per partition
     assert table_digest(t.read(spark)) == pre
@@ -45,8 +58,8 @@ def test_global_rewrite_skips_ledger_done_partitions(spark, tmp_table_dir, tmp_p
     assert len(res.partitions_done) == len(plan.partitions) - 1
 
 
-@pytest.mark.parametrize("assign", ["routes", "range"])
-def test_global_rewrite_files_are_zorder_clustered(spark, tmp_table_dir, tmp_path, assign):
+@pytest.mark.parametrize("entry", list(ENTRY_POINTS))
+def test_global_rewrite_files_are_zorder_clustered(spark, tmp_table_dir, tmp_path, entry):
     """Clustering quality gate (FIXTURES.md F4 golden_minmax): at EQUAL
     output file counts, the z-ordered layout's per-file n_tok spans must be
     substantially tighter than unclustered compaction — i.e. the manifest
@@ -60,60 +73,13 @@ def test_global_rewrite_files_are_zorder_clustered(spark, tmp_table_dir, tmp_pat
         spans = [f.stats["n_tok"][1] - f.stats["n_tok"][0] for f in files if "n_tok" in f.stats]
         return sum(spans) / len(spans)
 
-    from octocode_spark.lakehouse.maintenance import rewrite_partitions
-
     # z-order span reduction scales ~ nfiles^(1/3): compare at a realistic
     # many-files-per-partition geometry (the 100TB regime), not 1-2 files
     target = 192 * 1024
     rewrite_partitions(spark, t_plain, plan_compaction(t_plain, target_file_size=target),
                        cluster_by=None, target_file_size=target)
-    rewrite_global(spark, t_z, plan_compaction(t_z, target_file_size=target),
-                   cluster_by="zorder", assign=assign)
+    ENTRY_POINTS[entry](spark, t_z, plan_compaction(t_z, target_file_size=target))
     plain_span = avg_ntok_span(t_plain.files())
     z_span = avg_ntok_span(t_z.files())
     assert z_span <= plain_span * 0.7, (z_span, plain_span)
 
-
-def test_route_plan_stays_bounded_at_500_partitions(spark):
-    """O(1)-plan routing (round-4 verdict wrong #3): the per-partition cuts
-    and reducer labels ride in a broadcast-joined frame, so the routed
-    plan's size must NOT grow with partition count — the old literal
-    when-chain put ~10 expression nodes per partition into the plan (a
-    ~100k-node tree at 10k partitions). 500 planned partitions with 4 cuts
-    each must plan in a tree comparable to a 5-partition one, and route
-    values must equal the label of the correct bucket."""
-    from octocode_spark.lakehouse.maintenance import (
-        PartitionPlan,
-        _reducer_labels,
-        _route_rows,
-    )
-
-    def plan_n(n_parts: int):
-        routed, offset = [], 0
-        for i in range(n_parts):
-            p = PartitionPlan(partition={"source": f"s{i}"}, key=f"source=s{i}",
-                              inputs=[], target_files=5, reason="recluster")
-            cuts = [100, 200, 300, 400]
-            routed.append((p, offset, cuts))
-            offset += len(cuts) + 1
-        return routed, offset
-
-    def routed_plan(n_parts: int):
-        routed, n_buckets = plan_n(n_parts)
-        labels = _reducer_labels(n_buckets)
-        keyed = spark.createDataFrame(
-            [(f"s{i % n_parts}", (i * 97) % 500) for i in range(64)],
-            "source: string, _zkey: long",
-        )
-        df = _route_rows(spark, keyed, routed, ["source"], labels)
-        return df, labels, df._jdf.queryExecution().optimizedPlan().toString()
-
-    df5, _, plan5 = routed_plan(5)
-    df500, labels500, plan500 = routed_plan(500)
-    # bounded: the 100x-partition plan is not meaningfully bigger
-    assert len(plan500) < 2 * len(plan5) + 2000, (len(plan5), len(plan500))
-    # semantics: a row in partition s3 with _zkey 250 falls in local bucket 2
-    # (cuts 100,200 below it), global bucket = 3*5 + 2 -> labels[17]
-    rows = {(r["source"], r["_zkey"]): r["_route"] for r in df500.collect()}
-    assert rows[("s3", (3 * 97) % 500)] == labels500[3 * 5 + sum(
-        c < (3 * 97) % 500 for c in [100, 200, 300, 400])]

@@ -114,49 +114,6 @@ def test_q08_rank_windows_consume_topk_cut_only(spark, qs):
     assert len(pairs) == 2, tree
 
 
-def test_global_rewrite_plan_scans_fat_table_once(spark, tmp_table_dir):
-    """The routed clustered rewrite reads the fat table ONCE: exactly one
-    parquet scan of the table files and no range-sampling re-execution
-    (repartitionByRange would plan a second identical scan at runtime)."""
-    from pyspark.sql import functions as F
-
-    from octocode_spark.functions.zorder import with_cluster_key
-    from octocode_spark.lakehouse.maintenance import (
-        _reducer_labels,
-        _sample_bucket_cuts,
-        plan_compaction,
-    )
-    from tests.conftest import make_sequences_table
-
-    t = make_sequences_table(spark, tmp_table_dir, n_rows=800, small_files=8, max_tok_cap=64)
-    plan = plan_compaction(t)
-    todo = plan.partitions
-    routed = _sample_bucket_cuts(spark, t, todo, "zorder")
-    n_buckets = sum(max(len(c) + 1, 1) for _, _, c in routed)
-    labels = _reducer_labels(n_buckets)
-    all_inputs = [f for p in todo for f in p.inputs]
-    # the exact routed dataframe shape used by rewrite_global (r5: cuts +
-    # labels ride a broadcast-joined frame — _route_rows IS the prod code)
-    from octocode_spark.lakehouse.maintenance import _route_rows
-
-    keyed = with_cluster_key(t.read_files(spark, all_inputs), curve="zorder")
-    df = (
-        _route_rows(spark, keyed, routed, list(t.meta.partition_by), labels)
-        .repartition(n_buckets, "_route")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey", "_route")
-    )
-    plan_str = formatted_plan(df)
-    # formatted explain prints the tree then per-op details: one FAT-table
-    # scan in the tree block (the broadcast routes frame is a LocalTableScan,
-    # not a parquet scan; two parquet scans would mean re-execution)
-    tree = plan_str.split("\n\n")[0]
-    assert tree.count("Scan parquet") == 1, tree
-    assert "rangepartitioning" not in plan_str.lower()
-    assert "hashpartitioning" in plan_str.lower()  # the single route exchange
-    assert "EvalPython" not in plan_str  # zorder key stays JVM-side
-
-
 def test_q41_indexed_bm25_single_scan_no_aggregate(spark, qs):
     """Index-backed BM25 (the q41 registry path) must not recompute corpus
     stats: exactly one parquet scan, no aggregate/broadcast anywhere."""

@@ -121,29 +121,3 @@ def test_python_xxhash64_matches_jvm(spark):
         assert xxhash64_ints(*c) == row[f"i{i}"]
     for i, c in enumerate(cases_long):
         assert xxhash64_longs(*c) == row[f"l{i}"]
-
-
-def test_python_murmur3_matches_jvm_and_routes_exactly(spark):
-    """The murmur3 twin matches F.hash on longs, and preimage labels place
-    each bucket on exactly its intended reducer through a real repartition."""
-    from pyspark.sql import functions as F
-
-    from octocode_spark.functions.xxh import murmur3_long
-    from octocode_spark.lakehouse.maintenance import _reducer_labels
-
-    vals = [0, 1, 7, -5, 123456789012345, 2**62, -(2**63), 2**63 - 1]
-    row = spark.range(1).select(
-        *[F.hash(F.lit(v).cast("long")).alias(f"h{i}") for i, v in enumerate(vals)]
-    ).collect()[0]
-    for i, v in enumerate(vals):
-        assert murmur3_long(v) == row[f"h{i}"]
-
-    n = 37
-    labels = _reducer_labels(n)
-    df = spark.createDataFrame([(b, labels[b]) for b in range(n)], "bucket: int, route: long")
-    placed = (
-        df.repartition(n, "route")
-        .withColumn("pid", F.spark_partition_id())
-        .collect()
-    )
-    assert all(r["pid"] == r["bucket"] for r in placed)
