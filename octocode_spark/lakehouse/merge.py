@@ -108,26 +108,15 @@ def merge_into(
         candidates = []
 
     # exact confirm: semi-join target rows against source keys, collect file
-    # paths. The scan is position-tagged via _metadata (input_file_name()
-    # rejects multi-source plans once the sidecar anti-join joins in) and
-    # LIVE-row only: a row already MoR-deleted must not mark its file
+    # paths. The scan is the table's position-tagged live scan
+    # (input_file_name() rejects multi-source plans once the sidecar
+    # anti-join joins in): a row already MoR-deleted must not mark its file
     # touched nor survive into the rewrite.
     touched_rel: list[str] = []
     matched_candidates = 0
     dels = table.delete_files(snapshot_id=table.branch_head(branch) if branch else None)
     if candidates:
-        tgt = spark.read.schema(table.schema).parquet(
-            *[os.path.join(table.root, f.path) for f in candidates]
-        ).select(
-            "*",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_dfile"),
-            F.col("_metadata.row_index").alias("_dpos"),
-        )
-        if dels:
-            ddf = spark.read.parquet(
-                *[os.path.join(table.root, f.path) for f in dels]
-            ).select(F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos"))
-            tgt = tgt.join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_anti")
+        tgt = table._tagged_live_scan(spark, candidates, delete_files=dels)
         keys = src.select(key).distinct()
         join_keys = F.broadcast(keys) if n_src <= BROADCAST_KEY_LIMIT else keys
         hits = (

@@ -93,7 +93,9 @@ class Snapshot:
     snapshot_id: int
     parent_id: int | None
     timestamp_ms: int
-    operation: str  # append | replace | delete | overwrite | expire | rewrite-manifests
+    # append | import | overwrite | delete | merge | compact | replicate |
+    # prune-deletes | rewrite-manifests | replace (expiry commits no snapshot)
+    operation: str
     manifests: list[str]
     summary: dict[str, Any] = field(default_factory=dict)
 

@@ -115,22 +115,15 @@ def replicate_coalesced(
     inserts = src.read(spark, snapshot_id=head).join(changed, key, "left_semi")
 
     # build both halves of the commit, then commit ONCE
-    import os
-
     files = dst.files()
     sidecars: list = []
     if files:
         tagged = dst._tagged_live_scan(spark, files)
-        hits = tagged.join(changed, key, "left_semi").select(
-            F.col("_dfile").alias("file_name"), F.col("_dpos").cast("long").alias("pos")
-        )
-        sidecars = dst._write_delete_sidecar(hits)
+        sidecars = dst._write_delete_sidecar(tagged.join(changed, key, "left_semi"))
     data_files = dst._write_datafiles(inserts.select(*dst.schema.names))
     added = sidecars + data_files
     if not added:
         return head
-    basename_to_rel = {os.path.basename(f.path): f.path for f in files}
-    touched = dst._sidecar_file_names(sidecars) if sidecars else set()
     dst._commit(
         "replicate",
         added=added,
@@ -140,7 +133,7 @@ def replicate_coalesced(
             "mor-delete-entries": sum(f.records for f in sidecars),
             "inserted-files": len(data_files),
         },
-        require_live=[basename_to_rel[b] for b in touched if b in basename_to_rel],
+        require_live=[f.path for f in dst._sidecar_targets(sidecars, files)],
     )
     return head
 

@@ -21,6 +21,7 @@ data movement itself is zero-copy rename).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import shutil
@@ -45,7 +46,13 @@ from octocode_spark.lakehouse.metadata import (
 
 
 class CommitConflict(Exception):
-    """Raised when a replace commit loses: a file it replaces is gone."""
+    """Raised when a commit cannot land: a file it replaces or references is
+    gone, or it still lost the metadata race after ``COMMIT_RETRIES`` retries."""
+
+
+# retries of a lost metadata race (sleeping 0.01 s × attempt) before a
+# commit gives up with CommitConflict
+COMMIT_RETRIES = 20
 
 
 def _now_ms() -> int:
@@ -168,30 +175,15 @@ class LakeTable:
         anti-join build side is the delete set — broadcast, because the MoR
         tier is for deletes small enough that rewriting a 512MB file per row
         would be absurd write amplification; bulk deletes take the CoW path
-        and compaction folds sidecars away (maintenance.full_optimize)."""
+        and compaction folds sidecars away (maintenance.full_maintenance)."""
         if not files:
             return spark.createDataFrame([], self.schema)
-        paths = [os.path.join(self.root, f.path) for f in files]
-        src = spark.read.schema(self.schema).parquet(*paths)
         dels = self.delete_files() if delete_files is None else delete_files
         if not dels:
-            return src
-        from pyspark.sql import functions as F
-
-        del_paths = [os.path.join(self.root, f.path) for f in dels]
-        ddf = (
-            spark.read.parquet(*del_paths)
-            .select(F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos"))
-        )
-        tagged = src.select(
-            "*",
-            F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_dfile"),
-            F.col("_metadata.row_index").alias("_dpos"),
-        )
-        return (
-            tagged.join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_anti")
-            .drop("_dfile", "_dpos")
-        )
+            return spark.read.schema(self.schema).parquet(
+                *[os.path.join(self.root, f.path) for f in files]
+            )
+        return self._tagged_live_scan(spark, files, delete_files=dels).drop("_dfile", "_dpos")
 
     def incremental_files(self, from_snapshot_id: int, to_snapshot_id: int | None = None) -> list[DataFile]:
         """Data files ADDED strictly after ``from_snapshot_id`` and live at
@@ -288,27 +280,11 @@ class LakeTable:
                 if added_dels:
                     # the deleted ROWS: entries of the new sidecars joined
                     # back to their referenced (still-live-at-prev) files
-                    refs = self._sidecar_file_names(added_dels)
-                    ref_files = [
-                        f for f in self.files(prev.snapshot_id)
-                        if os.path.basename(f.path) in refs
-                    ]
-                    tagged = spark.read.schema(self.schema).parquet(
-                        *[os.path.join(self.root, f.path) for f in ref_files]
-                    ).select(
-                        "*",
-                        F.element_at(
-                            F.split(F.col("_metadata.file_path"), "/"), -1
-                        ).alias("_dfile"),
-                        F.col("_metadata.row_index").alias("_dpos"),
-                    )
-                    ddf = spark.read.parquet(
-                        *[os.path.join(self.root, f.path) for f in added_dels]
-                    ).select(
-                        F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos")
-                    )
+                    ref_files = self._sidecar_targets(added_dels, self.files(prev.snapshot_id))
+                    ddf = self._sidecar_frame(spark, added_dels)
                     dels = (
-                        tagged.join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_semi")
+                        self._tagged_live_scan(spark, ref_files, delete_files=[])
+                        .join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_semi")
                         .drop("_dfile", "_dpos")
                         .select(
                             "*",
@@ -500,8 +476,8 @@ class LakeTable:
         promotion), columns cannot be dropped, added columns must be nullable.
         Old data files are read back with the evolved schema; Spark null-fills
         the columns they predate. CAS-retried like every commit."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def change(meta: TableMetadata) -> dict:
             old = T.StructType.fromJson(meta.schema_json)
             old_by_name = {f.name: f for f in old.fields}
             new_names = {f.name for f in new_schema.fields}
@@ -524,20 +500,10 @@ class LakeTable:
                         )
                 elif not f.nullable:
                     raise ValueError(f"added column {f.name} must be nullable")
-            new_meta = TableMetadata(
-                table_uuid=meta.table_uuid,
-                schema_json=new_schema.jsonValue(),
-                partition_by=meta.partition_by,
-                stat_cols=meta.stat_cols,
-                current_snapshot_id=meta.current_snapshot_id,
-                snapshots=meta.snapshots,
-                properties=meta.properties,
-                version=meta.version + 1,
-            )
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return self
-            time.sleep(0.01)
+            return {"schema_json": new_schema.jsonValue()}
+
+        self._cas("evolve-schema", change)
+        return self
 
     def add_column(self, name: str, dtype) -> "LakeTable":
         """Convenience ALTER TABLE ADD COLUMN (nullable)."""
@@ -587,8 +553,8 @@ class LakeTable:
 
         Roll-FORWARD (to an abandoned ex-descendant) is allowed: a snapshot
         whose ancestry contains the current head is also accepted."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def change(meta: TableMetadata) -> dict:
             by_id = {s.snapshot_id: s for s in meta.snapshots}
             if snapshot_id not in by_id:
                 raise KeyError(f"snapshot {snapshot_id} not found (expired?)")
@@ -617,11 +583,9 @@ class LakeTable:
                     f"snapshot {snapshot_id} is not on main's ancestry (a WAP "
                     "branch commit?) — use publish_branch to promote staged data"
                 )
-            new_meta = self._with(meta, current_snapshot_id=snapshot_id)
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return self.meta.snapshot()
-            time.sleep(0.01)
+            return {"current_snapshot_id": snapshot_id}
+
+        return self._cas("rollback", change).snapshot()
 
     # ------------------------------------------------------------------ export / import
     def export_snapshot(self, dest_root: str, snapshot_id: int | None = None) -> "LakeTable":
@@ -762,8 +726,8 @@ class LakeTable:
     def create_branch(self, name: str) -> int:
         """Anchor a staging branch at the current main snapshot. Returns the
         fork-point snapshot id."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def change(meta: TableMetadata) -> dict:
             if self._branch_key(name) in meta.properties:
                 raise ValueError(f"branch {name!r} already exists")
             head = meta.current_snapshot_id
@@ -771,18 +735,17 @@ class LakeTable:
                 raise ValueError("cannot branch an empty table")
             props = dict(meta.properties)
             props[self._branch_key(name)] = json.dumps({"head": head, "fork_main": head})
-            if write_metadata_exclusive(self.root, self._with(meta, properties=props)):
-                self.refresh()
-                return head
-            time.sleep(0.01)
+            return {"properties": props}
+
+        return self._cas("create-branch", change).current_snapshot_id
 
     def publish_branch(self, name: str) -> int:
         """Atomic fast-forward of main to the branch head. REFUSES (loudly)
         when main moved past the fork point — the audited data was staged
         against a stale base, so the caller must re-stage, not silently
         overwrite concurrent commits. Returns the new main snapshot id."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def change(meta: TableMetadata) -> dict:
             info = self._branch_info(meta, name)
             if meta.current_snapshot_id != info["fork_main"]:
                 raise CommitConflict(
@@ -791,55 +754,36 @@ class LakeTable:
                 )
             props = dict(meta.properties)
             del props[self._branch_key(name)]
-            new_meta = self._with(meta, properties=props, current_snapshot_id=info["head"])
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return info["head"]
-            time.sleep(0.01)
+            return {"properties": props, "current_snapshot_id": info["head"]}
+
+        return self._cas("publish-branch", change).current_snapshot_id
 
     def update_properties(self, updates: dict[str, str]) -> None:
         """ALTER TABLE SET TBLPROPERTIES analog: CAS-merge ``updates`` into
         the table properties (a value of None deletes the key). Metadata-only
         commit — no snapshot, no data files touched."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def change(meta: TableMetadata) -> dict:
             props = dict(meta.properties)
             for k, v in updates.items():
                 if v is None:
                     props.pop(k, None)
                 else:
                     props[k] = str(v)
-            if write_metadata_exclusive(self.root, self._with(meta, properties=props)):
-                self.refresh()
-                return
-            time.sleep(0.01)
+            return {"properties": props}
+
+        self._cas("update-properties", change)
 
     def drop_branch(self, name: str) -> None:
         """Abandon a staging branch (its snapshots become expirable)."""
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def change(meta: TableMetadata) -> dict:
             self._branch_info(meta, name)  # raises if missing
             props = dict(meta.properties)
             del props[self._branch_key(name)]
-            if write_metadata_exclusive(self.root, self._with(meta, properties=props)):
-                self.refresh()
-                return
-            time.sleep(0.01)
+            return {"properties": props}
 
-    @staticmethod
-    def _with(meta: TableMetadata, **overrides) -> TableMetadata:
-        """Copy of ``meta`` at version+1 with field overrides."""
-        fields = {
-            "table_uuid": meta.table_uuid,
-            "schema_json": meta.schema_json,
-            "partition_by": meta.partition_by,
-            "stat_cols": meta.stat_cols,
-            "current_snapshot_id": meta.current_snapshot_id,
-            "snapshots": meta.snapshots,
-            "properties": meta.properties,
-        }
-        fields.update(overrides)
-        return TableMetadata(version=meta.version + 1, **fields)
+        self._cas("drop-branch", change)
 
     def overwrite_all(self, df: DataFrame) -> Snapshot:
         self._check_schema(df)
@@ -974,11 +918,14 @@ class LakeTable:
     ) -> DataFrame:
         """Position-tagged scan of still-LIVE rows: table columns plus
         (_dfile, _dpos) — the data file's basename and parquet row index —
-        with pending delete-sidecar entries anti-joined out. This is THE
-        canonical MoR keying plumbing; every consumer that writes or applies
-        positional deletes (predicate/keyed deletes, replication) must go
-        through it so sidecar key semantics live in exactly one place.
-        ``delete_files=None`` uses the current snapshot's sidecars."""
+        with the ``_sidecar_frame`` entries of pending delete sidecars
+        anti-joined out (broadcast). This is THE canonical MoR keying
+        plumbing, the only place a data row's sidecar key is built:
+        ``read_files`` (which drops the tags), MERGE's confirm scan,
+        ``changelog_read``'s deleted-row recovery, and the sidecar writers
+        (``_delete_from_scan``, replication, via ``_write_delete_sidecar``)
+        all build on it. ``delete_files=None`` uses the current snapshot's
+        sidecars; ``[]`` tags the raw rows."""
         from pyspark.sql import functions as F
 
         paths = [os.path.join(self.root, f.path) for f in files]
@@ -989,11 +936,18 @@ class LakeTable:
         )
         existing = self.delete_files() if delete_files is None else delete_files
         if existing:
-            ddf = spark.read.parquet(*[os.path.join(self.root, f.path) for f in existing]).select(
-                F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos")
-            )
+            ddf = self._sidecar_frame(spark, existing)
             tagged = tagged.join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_anti")
         return tagged
+
+    def _sidecar_frame(self, spark: SparkSession, sidecars: list[DataFile]) -> DataFrame:
+        """The entries of delete sidecars as (_dfile, _dpos), the key
+        ``_tagged_live_scan`` tags data rows with."""
+        from pyspark.sql import functions as F
+
+        return spark.read.parquet(*[os.path.join(self.root, f.path) for f in sidecars]).select(
+            F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos")
+        )
 
     def _delete_from_scan(
         self,
@@ -1008,23 +962,16 @@ class LakeTable:
         keep-rewrite of the hit files (neither mode can re-delete or
         resurrect a row another sidecar already removed — the tagged scan
         excludes pending sidecar entries)."""
-        from pyspark.sql import functions as F
-
         existing = self.delete_files()
         tagged = self._tagged_live_scan(spark, files, delete_files=existing)
         if mode == "mor":
-            hits = select_hits(tagged).select(
-                F.col("_dfile").alias("file_name"), F.col("_dpos").cast("long").alias("pos")
-            )
-            added = self._write_delete_sidecar(hits)
+            added = self._write_delete_sidecar(select_hits(tagged))
             if not added:
                 return None
-            basename_to_rel = {os.path.basename(f.path): f.path for f in files}
-            touched = self._sidecar_file_names(added)
             return self._commit(
                 "delete", added=added, replaced=[],
                 summary={"mor-delete-entries": sum(f.records for f in added)},
-                require_live=[basename_to_rel[b] for b in touched if b in basename_to_rel],
+                require_live=[f.path for f in self._sidecar_targets(added, files)],
             )
         hit_names = [
             r["_dfile"] for r in select_hits(tagged).select("_dfile").distinct().collect()
@@ -1044,12 +991,17 @@ class LakeTable:
         )
 
     def _write_delete_sidecar(self, hits: DataFrame) -> list[DataFile]:
-        """Write (file_name, pos) delete entries as ONE parquet sidecar under
-        data/_deletes/ and return its manifest entry (content="deletes").
-        coalesce(1): the MoR tier is for small deletes — a 1M-entry GDPR
-        batch is still a ~16MB single file."""
+        """Write the (_dfile, _dpos) tags of ``hits`` — rows of a
+        ``_tagged_live_scan`` — as (file_name, pos) delete entries in ONE
+        parquet sidecar under data/_deletes/ and return its manifest entry
+        (content="deletes"). coalesce(1): the MoR tier is for small deletes —
+        a 1M-entry GDPR batch is still a ~16MB single file."""
+        from pyspark.sql import functions as F
+
         staging = os.path.join(self.root, "_tmp", uuid.uuid4().hex)
-        hits.coalesce(1).write.mode("overwrite").parquet(staging)
+        hits.select(
+            F.col("_dfile").alias("file_name"), F.col("_dpos").cast("long").alias("pos")
+        ).coalesce(1).write.mode("overwrite").parquet(staging)
         out: list[DataFile] = []
         del_dir = os.path.join("data", "_deletes")
         os.makedirs(os.path.join(self.root, del_dir), exist_ok=True)
@@ -1083,19 +1035,50 @@ class LakeTable:
             names.update(tbl.column("file_name").to_pylist())
         return names
 
+    def _sidecar_targets(self, sidecars: list[DataFile], files: list[DataFile]) -> list[DataFile]:
+        """The data files among ``files`` that ``sidecars`` reference — a
+        sidecar commit's ``require_live`` set."""
+        names = self._sidecar_file_names(sidecars)
+        return [f for f in files if os.path.basename(f.path) in names]
+
     # ------------------------------------------------------------------ commit
+    def _cas(
+        self, what: str, change: Callable[[TableMetadata], dict | None]
+    ) -> TableMetadata | None:
+        """THE metadata commit (Iceberg optimistic concurrency): every
+        attempt loads the latest metadata, ``change(meta)`` returns the
+        field overrides of the next version (``None``: nothing to commit;
+        raise to refuse), and ``write_metadata_exclusive`` publishes it.
+        A lost race retries against fresh metadata, backing off linearly,
+        at most ``COMMIT_RETRIES`` times; then it raises CommitConflict.
+        Returns the committed metadata (also set as ``self.meta``)."""
+        attempt = 0
+        while True:
+            meta = load_latest_metadata(self.root)
+            overrides = change(meta)
+            if overrides is None:
+                return None
+            new_meta = dataclasses.replace(meta, version=meta.version + 1, **overrides)
+            if write_metadata_exclusive(self.root, new_meta):
+                self.meta = new_meta
+                return new_meta
+            attempt += 1
+            if attempt > COMMIT_RETRIES:
+                raise CommitConflict(f"{what}: lost {attempt} commit races, giving up")
+            time.sleep(0.01 * attempt)
+
     def _commit(
         self,
         operation: str,
         added: list[DataFile],
         replaced: list[str],
         summary: dict | None = None,
-        max_retries: int = 20,
         branch: str | None = None,
         require_live: list[str] | None = None,
         known_sidecars: set[str] | None = None,
     ) -> Snapshot:
-        """Optimistic commit: retried against fresh metadata on version races.
+        """Snapshot commit through ``_cas``: re-validated against fresh
+        metadata on every version race.
 
         ``require_live``: paths that must still be live data files in the
         parent snapshot for the commit to be valid (positional-delete
@@ -1121,9 +1104,8 @@ class LakeTable:
         """
         replaced_set = set(replaced)
         added_manifest = write_manifest(self.root, added) if added else None
-        attempt = 0
-        while True:
-            meta = load_latest_metadata(self.root) if attempt else self.meta
+
+        def change(meta: TableMetadata) -> dict:
             if branch is not None:
                 binfo = self._branch_info(meta, branch)
                 parent = meta.snapshot(binfo["head"])
@@ -1201,32 +1183,16 @@ class LakeTable:
                     **(summary or {}),
                 },
             )
-            if branch is not None:
-                props = dict(meta.properties)
-                props[self._branch_key(branch)] = json.dumps(
-                    {"head": snap.snapshot_id, "fork_main": binfo["fork_main"]}
-                )
-                current = meta.current_snapshot_id
-            else:
-                props = meta.properties
-                current = snap.snapshot_id
-            new_meta = TableMetadata(
-                table_uuid=meta.table_uuid,
-                schema_json=meta.schema_json,
-                partition_by=meta.partition_by,
-                stat_cols=meta.stat_cols,
-                current_snapshot_id=current,
-                snapshots=meta.snapshots + [snap],
-                properties=props,
-                version=meta.version + 1,
+            snapshots = meta.snapshots + [snap]
+            if branch is None:
+                return {"snapshots": snapshots, "current_snapshot_id": snap.snapshot_id}
+            props = dict(meta.properties)
+            props[self._branch_key(branch)] = json.dumps(
+                {"head": snap.snapshot_id, "fork_main": binfo["fork_main"]}
             )
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return snap
-            attempt += 1
-            if attempt > max_retries:
-                raise CommitConflict(f"{operation}: lost {max_retries} commit races, giving up")
-            time.sleep(0.01 * attempt)
+            return {"snapshots": snapshots, "properties": props}
+
+        return self._cas(operation, change).snapshots[-1]
 
     # ------------------------------------------------------------------ maintenance: expiry + GC
     def expire_snapshots(
@@ -1254,12 +1220,12 @@ class LakeTable:
         if clean_files and older_than_ms is None:
             older_than_ms = _now_ms() - self.ORPHAN_GRACE_MS
         self.last_gc_files: list[str] = []
-        while True:
-            meta = load_latest_metadata(self.root)
+        expired: list[Snapshot] = []
+
+        def change(meta: TableMetadata) -> dict | None:
             snaps = meta.snapshots
             keep: list[Snapshot] = []
-            expired: list[int] = []
-            expired_snaps: list[Snapshot] = []
+            expired.clear()
             branch_heads = {
                 json.loads(v)["head"]
                 for k, v in meta.properties.items()
@@ -1274,28 +1240,17 @@ class LakeTable:
                 )
                 too_old = older_than_ms is None or s.timestamp_ms < older_than_ms
                 if not retained and too_old:
-                    expired.append(s.snapshot_id)
-                    expired_snaps.append(s)
+                    expired.append(s)
                 else:
                     keep.append(s)
-            if not expired:
-                return []
-            new_meta = TableMetadata(
-                table_uuid=meta.table_uuid,
-                schema_json=meta.schema_json,
-                partition_by=meta.partition_by,
-                stat_cols=meta.stat_cols,
-                current_snapshot_id=meta.current_snapshot_id,
-                snapshots=keep,
-                properties=meta.properties,
-                version=meta.version + 1,
-            )
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                if clean_files:
-                    self.last_gc_files = self._clean_expired_files(keep, expired_snaps)
-                return expired
-            time.sleep(0.01)
+            return {"snapshots": keep} if expired else None
+
+        new_meta = self._cas("expire", change)
+        if new_meta is None:
+            return []
+        if clean_files:
+            self.last_gc_files = self._clean_expired_files(new_meta.snapshots, expired)
+        return [s.snapshot_id for s in expired]
 
     def _clean_expired_files(
         self, keep: list[Snapshot], expired: list[Snapshot]
@@ -1391,13 +1346,7 @@ class LakeTable:
                     os.unlink(os.path.join(self.root, rel))
                 except FileNotFoundError:
                     pass
-            # prune now-empty partition dirs
-            for dirpath, dirs, names in os.walk(data_root, topdown=False):
-                if not dirs and not names and dirpath != data_root:
-                    try:
-                        os.rmdir(dirpath)
-                    except OSError:
-                        pass
+            self._prune_empty_partition_dirs()
         return orphans
 
     def rewrite_manifests(self, group_by_partition: bool = True) -> Snapshot | None:
@@ -1417,8 +1366,8 @@ class LakeTable:
             key = partition_key(f.partition) if group_by_partition else "all"
             groups.setdefault(key, []).append(f)
         new_manifests = [write_manifest(self.root, fs) for fs in groups.values()]
-        while True:
-            meta = load_latest_metadata(self.root)
+
+        def change(meta: TableMetadata) -> dict:
             cur = meta.snapshot()
             if cur is None or cur.snapshot_id != snap.snapshot_id:
                 raise CommitConflict("rewrite-manifests: table advanced during rewrite")
@@ -1430,20 +1379,12 @@ class LakeTable:
                 manifests=new_manifests,
                 summary={"manifests-before": len(cur.manifests), "manifests-after": len(new_manifests)},
             )
-            new_meta = TableMetadata(
-                table_uuid=meta.table_uuid,
-                schema_json=meta.schema_json,
-                partition_by=meta.partition_by,
-                stat_cols=meta.stat_cols,
-                current_snapshot_id=new_snap.snapshot_id,
-                snapshots=meta.snapshots + [new_snap],
-                properties=meta.properties,
-                version=meta.version + 1,
-            )
-            if write_metadata_exclusive(self.root, new_meta):
-                self.meta = new_meta
-                return new_snap
-            time.sleep(0.01)
+            return {
+                "snapshots": meta.snapshots + [new_snap],
+                "current_snapshot_id": new_snap.snapshot_id,
+            }
+
+        return self._cas("rewrite-manifests", change).snapshots[-1]
 
 
 # ---------------------------------------------------------------------- helpers
@@ -1458,14 +1399,6 @@ def _escape_path_value(v: str) -> str:
 
 def _unescape_path_value(v: str) -> str:
     return v.replace("%3D", "=").replace("%2F", "/")
-
-
-def _strip_scheme(p: str) -> str:
-    from urllib.parse import unquote
-
-    if p.startswith("file://"):
-        p = p[7:]
-    return unquote(p)
 
 
 def stat_range_filter(col: str, lo=None, hi=None) -> Callable[[DataFile], bool]:

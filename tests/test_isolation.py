@@ -90,3 +90,70 @@ def test_conflicting_rewrites_one_wins_one_replans(spark, tmp_table_dir):
     plan = plan_compaction(b, force=True)
     rewrite_partitions(spark, b, plan)
     assert table_digest(b.read(spark)) == pre
+
+
+def _metadata_only_table(root: str) -> LakeTable:
+    """A table with one committed snapshot, built without a Spark job (its
+    manifest names a data file that is never read)."""
+    from pyspark.sql import types as T
+
+    from octocode_spark.lakehouse.metadata import DataFile
+
+    t = LakeTable.create(root, T.StructType([T.StructField("doc_id", T.StringType())]))
+    t._commit("append", added=[DataFile("data/x.parquet", {}, 1, 1)], replaced=[])
+    return t
+
+
+def test_concurrent_metadata_commits_lose_no_update(tmp_table_dir):
+    """8 handles race metadata-only commits (properties and branch refs)
+    from their own threads: every one lands — a lost race re-applies its
+    change to fresh metadata instead of overwriting the winner's."""
+    _metadata_only_table(tmp_table_dir)
+    handles = [LakeTable.load(tmp_table_dir) for _ in range(8)]
+    start = threading.Barrier(len(handles))
+    errs: list[Exception] = []
+
+    def commit(i: int, h: LakeTable) -> None:
+        start.wait()
+        try:
+            if i % 2:
+                h.create_branch(f"b{i}")
+            else:
+                h.update_properties({f"k{i}": f"v{i}"})
+        except Exception as e:  # noqa: BLE001
+            errs.append(e)
+
+    threads = [threading.Thread(target=commit, args=(i, h)) for i, h in enumerate(handles)]
+    [x.start() for x in threads]
+    [x.join() for x in threads]
+    assert not errs
+    meta = LakeTable.load(tmp_table_dir).meta
+    assert meta.version == 1 + len(handles)
+    for i in range(len(handles)):
+        key = f"branch:b{i}" if i % 2 else f"k{i}"
+        assert key in meta.properties, key
+    assert all(meta.properties[f"k{i}"] == f"v{i}" for i in range(0, len(handles), 2))
+
+
+def test_metadata_commit_gives_up_after_retry_bound(tmp_table_dir, monkeypatch):
+    """A commit that loses every race raises CommitConflict after
+    COMMIT_RETRIES retries instead of spinning forever."""
+    from octocode_spark.lakehouse import table as table_mod
+
+    t = _metadata_only_table(tmp_table_dir)
+    calls = []
+
+    def always_lose(root, meta):
+        calls.append(meta.version)
+        if len(calls) > 100:
+            raise RuntimeError("commit retried without bound")
+        return False
+
+    monkeypatch.setattr(table_mod, "write_metadata_exclusive", always_lose)
+    try:
+        t.update_properties({"k": "v"})
+        raise AssertionError("a commit that never wins must raise CommitConflict")
+    except CommitConflict:
+        pass
+    assert len(calls) == table_mod.COMMIT_RETRIES + 1
+    assert LakeTable.load(tmp_table_dir).meta.properties == {}

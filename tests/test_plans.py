@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 
 from octocode_spark.plans.explain import formatted_plan, plan_has
+from tests.conftest import make_sequences_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -154,3 +155,27 @@ def test_minhash_signatures_codegen_one_exchange(spark):
     assert tree.count("Scan parquet") == 1, tree
     assert "partial_min" in plan, "min aggregate must be map-side combinable"
     assert "lambdafunction" not in plan, "interpreted HOF crept back in"
+
+
+def _executed_joins(df) -> list[str]:
+    """Join operator lines of ``df``'s executed (AQE final) physical plan."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    return [line for line in plan.toString().splitlines() if "Join" in line]
+
+
+def test_read_files_applies_sidecars_as_one_broadcast_anti_join(spark, tmp_table_dir):
+    """read_files' contract: with no delete sidecars the plan is the plain
+    scan (no join at all); after a merge-on-read delete it is the scan plus
+    exactly one broadcast LeftAnti join against the sidecar entries."""
+    from pyspark.sql import functions as F
+
+    t = make_sequences_table(spark, tmp_table_dir, n_rows=400, small_files=4)
+    assert _executed_joins(t.read(spark)) == []
+    victim = t.read(spark).select("doc_id").orderBy("doc_id").first()["doc_id"]
+    t.delete_where(spark, F.col("doc_id") == victim, mode="mor")
+    joins = _executed_joins(t.read(spark))
+    assert len(joins) == 1, joins
+    assert "BroadcastHashJoin" in joins[0] and "LeftAnti" in joins[0], joins
