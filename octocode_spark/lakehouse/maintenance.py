@@ -19,27 +19,31 @@ byte size (longest-pole-first) — at 1000 executors the scheduler fills the
 tail with small partitions.
 
 One rewrite body, ``_rewrite_group``: read a group of planned partitions
-once, range-shuffle them on (partition columns, curve key) — or coalesce when
-not clustering — write once, commit per partition. ``rewrite_global`` runs it
-once over the whole plan; ``rewrite_partitions`` once per partition,
-sequentially or on a thread pool; ``full_maintenance`` picks between the two
-by the share of table bytes the plan covers.
+once, route every row to one of its partition's own ``target_files`` shuffle
+slots (``repartitionById``; the curve key's cut points pick the slot when
+clustering, a broadcast-joined per-partition relation carries offsets and
+cut points), sort, write once, commit per partition. Both entry points pack
+the plan into groups run one after another: ``rewrite_partitions`` bounds a
+group by ``max_concurrency × defaultParallelism`` output files,
+``rewrite_global`` puts the whole plan in one group; ``full_maintenance``
+picks between the two by the share of table bytes the plan covers.
 """
 
 from __future__ import annotations
 
+import math
 import os
-import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from octocode_spark.functions.zorder import with_cluster_key
 from octocode_spark.lakehouse.ledger import Ledger
 from octocode_spark.lakehouse.metadata import DataFile
-from octocode_spark.lakehouse.table import LakeTable, partition_key
+from octocode_spark.lakehouse.table import LakeTable, partition_key, partition_key_col
 
 TARGET_FILE_SIZE = 512 * 1024 * 1024  # north-star 512MB bin-pack target
 
@@ -138,7 +142,7 @@ class RewriteResult:
     rows: int
     seconds: float
     snapshots: list[int]
-    phases: dict = field(default_factory=dict)  # per-phase seconds (bench attribution)
+    phases: dict = field(default_factory=dict)  # per-phase seconds, summed over groups
 
 
 def _resume(table: LakeTable, plan: CompactionPlan, ledger: Ledger | None,
@@ -153,6 +157,77 @@ def _resume(table: LakeTable, plan: CompactionPlan, ledger: Ledger | None,
     return [p for p in plan.partitions if p.key not in done], res
 
 
+def _local_frame(spark: SparkSession, rows: list[dict], schema: pa.Schema) -> DataFrame:
+    """A small driver-side relation. Built from Arrow it is a LocalRelation
+    (rows held in the plan) rather than a Python RDD, so scanning it starts
+    no Python worker."""
+    return spark.createDataFrame(pa.Table.from_pylist(rows, schema=schema))
+
+
+def _cut_points(spark: SparkSession, df: DataFrame, multi: list[PartitionPlan]) -> dict[str, list]:
+    """Per partition with target_files = t > 1, its t-1 ``_zkey`` cut points:
+    one ``percentile_approx`` aggregate grouped by partition on a shared grid
+    of g = max t quantiles; cut i is the grid point floor(i·g/t)/g, at most
+    1/g below i/t, and the t-1 points are distinct because g ≥ t."""
+    g = max(p.target_files for p in multi)
+    t = {p.key: p.target_files for p in multi}
+    wanted = _local_frame(spark, [{"_pkey": k} for k in t], pa.schema([("_pkey", pa.string())]))
+    rows = (
+        df.join(F.broadcast(wanted), "_pkey")
+        .groupBy("_pkey")
+        .agg(F.percentile_approx("_zkey", [i / g for i in range(1, g)]).alias("q"))
+        .collect()
+    )
+    return {r["_pkey"]: [r["q"][i * g // t[r["_pkey"]] - 1] for i in range(1, t[r["_pkey"]])]
+            for r in rows}
+
+
+_SLOTS = pa.schema([("_pkey", pa.string()), ("_off", pa.int32()), ("_t", pa.int32()),
+                    ("_cuts", pa.list_(pa.int64()))])
+
+
+def _route(spark: SparkSession, df: DataFrame, group: list[PartitionPlan],
+           part_cols: list[str], cluster_by: str | None) -> DataFrame:
+    """The group's rows in Σ target_files shuffle slots, ready to write.
+
+    A row's slot is its partition's offset (running Σ target_files over the
+    group) plus a bucket — the number of the partition's ``_zkey`` cut points
+    at or below the row's key when clustering, round-robin otherwise — so
+    every partition owns exactly its ``target_files`` slots and no output
+    file spans two partitions. Offsets and cut points reach the rows through
+    a broadcast join with a small per-partition relation, so the plan's
+    expressions stay the same size whatever the group holds."""
+    df = df.withColumn("_pkey", partition_key_col(part_cols))
+    slots, n_out = [], 0
+    for p in group:
+        slots.append({"_pkey": p.key, "_off": n_out, "_t": p.target_files, "_cuts": []})
+        n_out += p.target_files
+    if cluster_by:
+        # disjoint per-file curve-key ranges → tight min/max stats → manifest
+        # file-skipping works. The cut-point aggregate scans the inputs a
+        # second time, and only when some partition targets several files;
+        # recomputing costs ~1/8th of caching (columnar cache
+        # materialization of wide token rows is far more expensive than a
+        # parquet re-scan), so we deliberately do NOT persist.
+        df = with_cluster_key(df, curve=cluster_by)
+        multi = [p for p in group if p.target_files > 1]
+        cuts = _cut_points(spark, df, multi) if multi else {}
+        for s in slots:
+            s["_cuts"] = cuts.get(s["_pkey"], [])
+        bucket = F.size(F.filter("_cuts", lambda c: c <= F.col("_zkey")))
+    else:
+        bucket = F.pmod(F.monotonically_increasing_id(), F.col("_t"))
+    df = df.join(F.broadcast(_local_frame(spark, slots, _SLOTS)), "_pkey", "left")
+    # a row whose partition is not in the group cannot happen (the inputs
+    # are the group's files); fail loudly rather than pile it onto slot 0
+    slot = F.when(F.col("_off").isNull(),
+                  F.raise_error(F.concat(F.lit("unplanned partition "), F.col("_pkey"))))
+    df = df.repartitionById(n_out, slot.otherwise(F.col("_off") + bucket).cast("int"))
+    if cluster_by:
+        df = df.sortWithinPartitions(*part_cols, "_zkey").drop("_zkey")
+    return df.drop("_pkey", "_off", "_t", "_cuts")
+
+
 def _rewrite_group(
     spark: SparkSession,
     table: LakeTable,
@@ -161,12 +236,15 @@ def _rewrite_group(
     op: str,
     cluster_by: str | None,
     res: RewriteResult,
-    lock: threading.Lock,
-) -> dict:
-    """Rewrite a group of planned partitions with ONE read + ONE write, then
-    commit each partition as its own atomic snapshot, ledger row written ONLY
-    after the snapshot commits (C3 write ordering). Adds the group's counts
-    to ``res`` under ``lock``; returns the per-phase seconds."""
+    fail_after: int | None = None,
+) -> None:
+    """Rewrite a group of planned partitions with ONE read + ONE shuffle +
+    ONE write (``_route`` gives each partition its own ``target_files``
+    output files), then commit each partition as its own atomic snapshot,
+    ledger row written ONLY after the snapshot commits (C3 write ordering).
+    Adds the group's counts and phase seconds to ``res``; ``fail_after``
+    (test hook) simulates a kill once that many partitions of the whole
+    rewrite have committed."""
     if ledger:
         for p in group:
             ledger.mark_pending(op, p.key)
@@ -175,36 +253,21 @@ def _rewrite_group(
     # silently resurrected (validateNoNewDeleteFiles, _commit docstring)
     planned_sidecars = table.delete_files()
     df = table.read_files(spark, [f for p in group for f in p.inputs], delete_files=planned_sidecars)
-    n_out = sum(p.target_files for p in group)
-    if cluster_by:
-        # one balanced range exchange over (partition, curve key) → disjoint
-        # per-file key ranges → tight min/max stats → manifest file-skipping
-        # works, and a Zipf-hot partition spreads over its share of reducers.
-        # repartitionByRange SAMPLES its child to pick bounds, so the scan +
-        # curve key run twice. Measured: recomputing costs ~1/8th of caching
-        # (columnar cache materialization of wide token rows is far more
-        # expensive than a parquet re-scan), so we deliberately do NOT persist.
-        part_cols = table.meta.partition_by
-        df = (
-            with_cluster_key(df, curve=cluster_by)
-            .repartitionByRange(n_out, *part_cols, "_zkey")
-            .sortWithinPartitions(*part_cols, "_zkey")
-            .drop("_zkey")
-        )
-    else:
-        # pure bin-pack (no re-cluster): coalesce merges small files with
-        # NO shuffle — round-robin repartition would pay both a full
-        # shuffle and Spark's sort-before-repartition on fat token rows
-        df = df.coalesce(n_out)
-    added, phases = table._write_datafiles_timed(df)
+    added, phases = table._write_datafiles_timed(_route(spark, df, group, table.meta.partition_by, cluster_by))
 
     t_c0 = time.monotonic()
     added_by_part: dict[str, list[DataFile]] = {}
     for f in added:
         added_by_part.setdefault(partition_key(f.partition), []).append(f)
+    unplanned = set(added_by_part) - {p.key for p in group}
+    if unplanned:  # outputs for partitions not in the group: impossible by
+        # construction (inputs came only from group partitions), fail loudly
+        raise RuntimeError(f"unplanned output partitions: {sorted(unplanned)}")
     known = {f.path for f in planned_sidecars}
     for p in group:
-        new_files = added_by_part.pop(p.key, [])
+        if fail_after is not None and len(res.partitions_done) >= fail_after:
+            raise RuntimeError(f"simulated kill after {fail_after} partitions")
+        new_files = added_by_part.get(p.key, [])
         snap = table.replace_files(
             [f.path for f in p.inputs],
             new_files,
@@ -214,18 +277,45 @@ def _rewrite_group(
         )
         if ledger:
             ledger.mark_done(op, p.key, len(p.inputs), p.bytes, p.records, snap.snapshot_id)
-        with lock:
-            res.partitions_done.append(p.key)
-            res.files_in += len(p.inputs)
-            res.files_out += len(new_files)
-            res.bytes_in += p.bytes
-            res.rows += p.records
-            res.snapshots.append(snap.snapshot_id)
-    if added_by_part:  # outputs for partitions not in the group: impossible by
-        # construction (inputs came only from group partitions), fail loudly
-        raise RuntimeError(f"unplanned output partitions: {sorted(added_by_part)}")
+        res.partitions_done.append(p.key)
+        res.files_in += len(p.inputs)
+        res.files_out += len(new_files)
+        res.bytes_in += p.bytes
+        res.rows += p.records
+        res.snapshots.append(snap.snapshot_id)
     phases["commit_s"] = round(time.monotonic() - t_c0, 3)
-    return phases
+    for k, v in phases.items():
+        res.phases[k] = round(res.phases.get(k, 0.0) + v, 3)
+
+
+def _rewrite_packed(
+    spark: SparkSession,
+    table: LakeTable,
+    plan: CompactionPlan,
+    ledger: Ledger | None,
+    op: str,
+    cluster_by: str | None,
+    bound: float,
+    fail_after: int | None = None,
+) -> RewriteResult:
+    """Pack the planned partitions still to do, in plan order (largest
+    first), into groups of Σ target_files ≤ ``bound`` — a partition above the
+    bound is a group of its own — and run one ``_rewrite_group`` per group,
+    one group after another."""
+    todo, res = _resume(table, plan, ledger, op)
+    t0 = time.monotonic()
+    group: list[PartitionPlan] = []
+    width = 0
+    for p in todo:
+        if group and width + p.target_files > bound:
+            _rewrite_group(spark, table, group, ledger, op, cluster_by, res, fail_after)
+            group, width = [], 0
+        group.append(p)
+        width += p.target_files
+    if group:
+        _rewrite_group(spark, table, group, ledger, op, cluster_by, res, fail_after)
+    res.seconds = time.monotonic() - t0
+    return res
 
 
 def rewrite_partitions(
@@ -236,35 +326,20 @@ def rewrite_partitions(
     op: str = "compact",
     cluster_by: str | None = None,  # None | "zorder" | "hilbert"
     target_file_size: int = TARGET_FILE_SIZE,
-    fail_after: int | None = None,  # test hook: simulate a kill after k partitions
+    fail_after: int | None = None,  # test hook: simulate a kill after k partition commits
     max_concurrency: int = 1,
 ) -> RewriteResult:
-    """Incremental mode: one ``_rewrite_group`` job per planned partition, so
-    a killed job loses at most the partitions in flight.
-
-    ``max_concurrency`` > 1 runs partition rewrites as concurrent Spark jobs
-    (Iceberg's rewrite action does the same with file groups): the scheduler
-    interleaves their stages, so a small partition's single write task no
-    longer leaves the cluster idle while a big one sorts. Commits stay safe —
-    the plans touch disjoint files and the metadata CAS serializes them.
+    """Incremental mode: pack the planned partitions, largest first, into
+    groups of at most ``max_concurrency × defaultParallelism`` output files —
+    the work k concurrent full-width jobs would keep in flight — and run one
+    ``_rewrite_group`` per group, one group after another (Iceberg's
+    RewriteDataFiles packs small partitions into file groups the same way).
+    A partition above the bound is a group of its own. Commits and ledger
+    rows stay per partition, so a killed job loses at most one group's
+    uncommitted partitions.
     """
-    todo, res = _resume(table, plan, ledger, op)
-    lock = threading.Lock()
-    t0 = time.monotonic()
-
-    def run_one(p: PartitionPlan) -> None:
-        _rewrite_group(spark, table, [p], ledger, op, cluster_by, res, lock)
-
-    if max_concurrency <= 1 or fail_after is not None:
-        for completed, p in enumerate(todo):
-            if fail_after is not None and completed >= fail_after:
-                raise RuntimeError(f"simulated kill after {completed} partitions")
-            run_one(p)
-    else:
-        with ThreadPoolExecutor(max_workers=max_concurrency) as pool:
-            list(pool.map(run_one, todo))
-    res.seconds = time.monotonic() - t0
-    return res
+    bound = max(1, max_concurrency) * spark.sparkContext.defaultParallelism
+    return _rewrite_packed(spark, table, plan, ledger, op, cluster_by, bound, fail_after)
 
 
 def rewrite_global(
@@ -276,26 +351,15 @@ def rewrite_global(
     cluster_by: str | None = "zorder",
 ) -> RewriteResult:
     """Throughput mode: ONE ``_rewrite_group`` over every planned partition —
-    one read and one range shuffle, then per-partition atomic commits.
+    one read and one shuffle, then per-partition atomic commits.
 
-    vs rewrite_partitions (incremental mode): no per-partition job overhead
-    and full-cluster parallelism on one shuffle — the right shape when most
-    of the table needs rewriting (initial cluster, major compaction). Commit
-    + ledger granularity is unchanged (still per partition); what coarsens is
+    vs rewrite_partitions (incremental mode): no bound on the group, so
+    full-cluster parallelism on one shuffle — the right shape when most of
+    the table needs rewriting (initial cluster, major compaction). Commit +
+    ledger granularity is unchanged (still per partition); what coarsens is
     compute-resume: a kill before the write finishes replays the whole job.
     """
-    if not cluster_by:
-        raise ValueError(
-            "rewrite_global is the clustering path; pure bin-packing is a "
-            "per-partition coalesce — use rewrite_partitions(cluster_by=None)"
-        )
-    todo, res = _resume(table, plan, ledger, op)
-    if not todo:
-        return res
-    t0 = time.monotonic()
-    res.phases = _rewrite_group(spark, table, todo, ledger, op, cluster_by, res, threading.Lock())
-    res.seconds = time.monotonic() - t0
-    return res
+    return _rewrite_packed(spark, table, plan, ledger, op, cluster_by, math.inf)
 
 
 def prune_dangling_delete_sidecars(table: LakeTable):
@@ -337,9 +401,9 @@ def full_maintenance(
     the reference) — a maintenance engine must fail loudly."""
     plan = plan_compaction(table, target_file_size=target_file_size)
     # adaptive mode choice (M2 spirit): when most of the table is being
-    # rewritten, one global scan+shuffle beats per-partition jobs (no per-job
-    # latency, full-width shuffle); for incremental touch-ups, per-partition
-    # jobs keep compute-resume granularity
+    # rewritten, one global scan+shuffle beats several jobs (no per-job
+    # latency, full-width shuffle); for incremental touch-ups, bounded groups
+    # keep compute-resume granularity
     table_bytes = sum(f.bytes for f in table.files()) or 1
     if cluster_by and plan.bytes / table_bytes > 0.5:
         rewrite = rewrite_global(spark, table, plan, ledger=ledger, op="compact",

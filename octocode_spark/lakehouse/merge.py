@@ -24,11 +24,13 @@ Execution, Spark-first:
 
 from __future__ import annotations
 
+import bisect
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from octocode_spark.lakehouse.ledger import Ledger
 from octocode_spark.lakehouse.table import LakeTable, partition_key
@@ -80,30 +82,20 @@ def merge_into(
     # ---- 1. pruning: which live files can contain a source key?
     live = table.files(snapshot_id=table.branch_head(branch) if branch else None)
     if live:
-        # metadata prune on doc_id min/max (cheap, driver-side over manifests).
-        # GATED on the same BROADCAST_KEY_LIMIT as the exact confirm below
-        # (round-5 verdict wrong #2): the prune broadcasts the distinct source
-        # keys into a nested-loop range join of O(files × keys) — at 50M keys
-        # that is an executor-OOM-sized broadcast for a prune that buys
-        # nothing (a source that large hits nearly every file anyway, and the
-        # exact semi-join below owns correctness either way).
-        key_stats_known = [f for f in live if key in f.stats]
-        if n_src > BROADCAST_KEY_LIMIT:
+        # metadata prune on doc_id min/max (driver-side over manifests): one
+        # Arrow collect of the distinct non-NULL source keys, then a bisect
+        # per file's [kmin, kmax]. GATED on the same BROADCAST_KEY_LIMIT as
+        # the exact confirm below (round-5 verdict wrong #2): a 50M-key
+        # source would be a driver-OOM-sized collect for a prune that buys
+        # nothing (a source that large hits nearly every file anyway, and
+        # the exact semi-join below owns correctness either way).
+        keys = None
+        if n_src <= BROADCAST_KEY_LIMIT and all(key in f.stats for f in live):
+            keys = _sorted_keys(src, key)
+        if keys is None:
             candidates = live
-        elif key_stats_known and len(key_stats_known) == len(live):
-            bounds = [(f.path, f.stats[key][0], f.stats[key][1]) for f in live]
-            bdf = spark.createDataFrame(bounds, ["path", "kmin", "kmax"])
-            hit_paths = {
-                r["path"]
-                for r in bdf.join(
-                    F.broadcast(src.select(F.col(key).alias("k")).distinct()),
-                    (F.col("k") >= F.col("kmin")) & (F.col("k") <= F.col("kmax")),
-                    "left_semi",
-                ).collect()
-            }
-            candidates = [f for f in live if f.path in hit_paths]
         else:
-            candidates = live
+            candidates = [f for f in live if _may_hold(keys, *f.stats[key])]
     else:
         candidates = []
 
@@ -199,6 +191,24 @@ def merge_into(
         source_rows=n_src,
         snapshot_id=snap.snapshot_id,
     )
+
+
+def _sorted_keys(src: DataFrame, key: str) -> list | None:
+    """The distinct non-NULL values of ``src[key]``, sorted — or None when the
+    key is neither an integer nor a binary-collated string: other types'
+    manifest stats (stringified dates, decimals, NaN-bearing floats) do not
+    order like the values."""
+    dt = src.schema[key].dataType
+    if not (isinstance(dt, T.IntegralType) or dt == T.StringType()):
+        return None
+    keys = src.select(key).where(F.col(key).isNotNull()).distinct().toArrow()
+    return sorted(keys.column(0).to_pylist())
+
+
+def _may_hold(keys: list, kmin, kmax) -> bool:
+    """Some key in the sorted ``keys`` lies in [kmin, kmax]."""
+    i = bisect.bisect_left(keys, kmin)
+    return i < len(keys) and keys[i] <= kmax
 
 
 def _anti_join_salted(

@@ -24,6 +24,7 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+import re
 import shutil
 import time
 import uuid
@@ -1389,16 +1390,39 @@ class LakeTable:
 
 # ---------------------------------------------------------------------- helpers
 
+NULL_PARTITION = "__HIVE_DEFAULT_PARTITION__"  # Spark's directory value for NULL and ""
+
+# the characters Spark's ExternalCatalogUtils.escapePathName writes as %XX in
+# a partition directory name
+_PATH_ESCAPED = frozenset([chr(c) for c in range(1, 0x20)] + list("\"#%'*/:=?\\\x7f{[]^"))
+
+
 def partition_key(partition: dict[str, str]) -> str:
     return "/".join(f"{k}={v}" for k, v in sorted(partition.items())) or "<unpartitioned>"
 
 
+def partition_key_col(part_cols: list[str]):
+    """``partition_key`` of each row's partition values, as a Column: the
+    string cast Spark writes a directory value from (session time zone), NULL
+    and "" as ``NULL_PARTITION``. Partition dicts hold the unescaped directory
+    value, so the two agree for every value Spark can write."""
+    from pyspark.sql import functions as F
+
+    if not part_cols:
+        return F.lit(partition_key({}))
+
+    def value(c: str):
+        return F.coalesce(F.nullif(F.col(c).cast("string"), F.lit("")), F.lit(NULL_PARTITION))
+    return F.concat_ws("/", *(F.concat(F.lit(f"{c}="), value(c)) for c in sorted(part_cols)))
+
+
 def _escape_path_value(v: str) -> str:
-    return v.replace("/", "%2F").replace("=", "%3D")
+    return "".join(f"%{ord(ch):02X}" if ch in _PATH_ESCAPED else ch for ch in v)
 
 
 def _unescape_path_value(v: str) -> str:
-    return v.replace("%3D", "=").replace("%2F", "/")
+    """Spark's unescapePathName: every %XX hex pair back to its character."""
+    return re.sub(r"%([0-9A-Fa-f]{2})", lambda m: chr(int(m.group(1), 16)), v)
 
 
 def stat_range_filter(col: str, lo=None, hi=None) -> Callable[[DataFile], bool]:
