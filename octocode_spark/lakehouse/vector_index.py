@@ -13,18 +13,67 @@ The split of concerns:
   with `files(partition_filter={"_cell": ...})`: probing n_probe of
   n_clusters cells is MANIFEST-level file skipping, not a filter over a
   cached DataFrame. At 100 TB the non-probed cells' files are never opened.
+
+One codec stores the vectors: `_index_config` parses the `ivf.*`
+properties, `_encode` maps (id, vec, _cell) to the stored row of the
+quantize mode (none, sq8, rq1, rq1c) and its schema, `_decode` maps a
+stored row back to (id, vec). Build, append and recluster all write
+through `_encode`; recluster and the exact re-rank read through `_decode`.
 """
 
 from __future__ import annotations
 
 import json
+import math
+from typing import Mapping, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from octocode_spark.lakehouse.table import DataFile, LakeTable
-from octocode_spark.operators.ann import IvfIndex, brute_force_topk, rank_cells
+from octocode_spark.operators.ann import (
+    IvfIndex,
+    _bind,
+    _norm,
+    _unit,
+    brute_force_topk,
+    build_ivf_index,
+    calculate_ivf_params,
+    needs_reindex,
+    rank_cells,
+    rq1_code_col,
+    rq1_hamming,
+    rq1_hamming_cols,
+    rq1_query_code,
+    should_recreate_index,
+)
+
+
+class _IndexConfig(NamedTuple):
+    centroids: list[list[float]]
+    id_col: str
+    vec_col: str
+    normalized: bool   # centroids live on the unit sphere
+    quantize: str      # "none", "sq8", "rq1" or "rq1c"
+    dim: int
+    indexed_rows: int  # rows the quantizer was trained on
+    n_clusters: int
+
+
+def _index_config(props: Mapping[str, str]) -> _IndexConfig:
+    """The index's ``ivf.*`` table properties, parsed in this one place."""
+    centroids = json.loads(props["ivf.centroids"])
+    return _IndexConfig(
+        centroids=centroids,
+        id_col=props["ivf.id_col"],
+        vec_col=props["ivf.vec_col"],
+        normalized=props.get("ivf.normalized") == "true",
+        quantize=props.get("ivf.quantize") or "none",
+        dim=int(props["ivf.dim"]),
+        indexed_rows=int(props.get("ivf.indexed_rows", "0")),
+        n_clusters=int(props.get("ivf.n_clusters", "0")) or len(centroids),
+    )
 
 
 def _centroid_frame(spark: SparkSession, centroids) -> DataFrame:
@@ -32,6 +81,75 @@ def _centroid_frame(spark: SparkSession, centroids) -> DataFrame:
     adaptive cell count (1024 × dim doubles)."""
     rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(centroids)]
     return spark.createDataFrame(rows, "_cell: int, _cen: array<double>")
+
+
+def _encode(df: DataFrame, cfg: _IndexConfig) -> tuple[DataFrame, T.StructType]:
+    """(id, vec, _cell) rows → the stored rows of ``cfg.quantize``, with the
+    table schema they are persisted under.
+
+    - ``none``: the vector as given;
+    - ``sq8``: components round(v/scale) as ints, scale = max|v|/127;
+    - ``rq1``: the sign code of v (rq1_code_col), ‖v‖ as ``_scale``;
+    - ``rq1c``: the same over the residual against the cell centroid, taken
+      in the assignment space (unit vectors when the index is spherical):
+      on clustered corpora every vector in a cell shares its centroid's sign
+      pattern, so global-sign codes cannot discriminate within the cell."""
+    src = {f.name: f for f in df.schema.fields}
+    id_col, vec_col = cfg.id_col, cfg.vec_col
+    cell = T.StructField("_cell", T.IntegerType(), False)
+    if cfg.quantize == "none":
+        return df.select(id_col, vec_col, "_cell"), T.StructType([src[id_col], src[vec_col], cell])
+    v = F.col(vec_col).cast("array<double>")
+    if cfg.quantize == "sq8":
+        scale = F.greatest(
+            F.aggregate(v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))) / F.lit(127.0),
+            F.lit(1e-30),
+        )
+        code = _bind(scale, lambda s: F.transform(v, lambda x: F.round(x / s).cast("int")))
+        code_type, norm = T.IntegerType(), scale
+    elif cfg.quantize in ("rq1", "rq1c"):
+        if cfg.quantize == "rq1c":
+            df = df.join(F.broadcast(_centroid_frame(df.sparkSession, cfg.centroids)), "_cell")
+            v = F.zip_with(_unit(v) if cfg.normalized else v, F.col("_cen"), lambda x, c: x - c)
+        code, code_type, norm = rq1_code_col(v, cfg.dim), T.LongType(), _norm(v)
+    else:
+        raise ValueError(
+            f"unknown quantize mode {cfg.quantize!r} (None, 'sq8', 'rq1', or 'rq1c')"
+        )
+    schema = T.StructType([
+        T.StructField(id_col, src[id_col].dataType, True),
+        T.StructField(vec_col, T.ArrayType(code_type), True),
+        T.StructField("_scale", T.DoubleType(), True),
+        cell,
+    ])
+    # `_scale` first: in one select, a name inside a nested lambda (the
+    # residual's _unit) binds to an alias made earlier in that select list
+    stored = df.withColumn("_scale", norm).select(F.col(id_col), code.alias(vec_col), "_scale", "_cell")
+    return stored, schema
+
+
+def _decode(df: DataFrame, cfg: _IndexConfig) -> DataFrame:
+    """(id, vec) of stored rows, vec as near the original as the code keeps:
+    sq8 decodes q·scale. A sign code keeps only v̂_i = (±1)·scale/√dim —
+    directions survive, magnitudes are per-vector uniform, ample for
+    re-training a coarse quantizer; rq1c adds the cell centroid back."""
+    vec = F.col(cfg.vec_col)
+    if cfg.quantize == "sq8":
+        vec = F.transform(vec, lambda q: q.cast("double") * F.col("_scale"))
+    elif cfg.quantize in ("rq1", "rq1c"):
+        vec = F.transform(
+            F.sequence(F.lit(0), F.lit(cfg.dim - 1)),
+            lambda i: (
+                F.getbit(
+                    F.element_at(vec, F.floor(i / F.lit(64)).cast("int") + F.lit(1)),
+                    i % F.lit(64),
+                ).cast("double") * F.lit(2.0) - F.lit(1.0)
+            ) * F.col("_scale") / F.lit(math.sqrt(cfg.dim)),
+        )
+        if cfg.quantize == "rq1c":
+            df = df.join(F.broadcast(_centroid_frame(df.sparkSession, cfg.centroids)), "_cell")
+            vec = F.zip_with(vec, F.col("_cen"), lambda s, c: s + c)
+    return df.select(F.col(cfg.id_col), vec.alias(cfg.vec_col))
 
 
 def persist_ivf_index(index: IvfIndex, root: str, quantize: str | None = None) -> LakeTable:
@@ -54,86 +172,19 @@ def persist_ivf_index(index: IvfIndex, root: str, quantize: str | None = None) -
     exact-re-ranks a shortlist against caller-supplied full vectors — see
     ivf_search_persisted(rerank_vectors=...). At 100 TB of embeddings the
     8× storage delta vs sq8 is the difference between an index that fits
-    and one that doesn't."""
-    sample = index.assigned.schema
-    dim = len(index.centroids[0])
-    assigned = index.assigned
-    if quantize in ("rq1", "rq1c"):
-        from octocode_spark.operators.ann import rq1_code_col
-
-        v = F.col(index.vec_col).cast("array<double>")
-        if quantize == "rq1c":
-            # CENTERED codes (the actual RaBitQ shape,
-            # vector_optimizer.rs:26-54: bits quantize the RESIDUAL against
-            # the cell centroid, not the raw vector): on clustered corpora
-            # every vector in a cell shares its centroid's sign pattern, so
-            # global-sign codes cannot discriminate WITHIN the cell —
-            # measured recall@10 0.225 on a 16-mode corpus vs 0.9+ centered.
-            # The per-cell centroid rides in a broadcast-joined frame; the
-            # coded space matches the assignment space (normalized when the
-            # index is spherical).
-            assigned = assigned.join(
-                F.broadcast(_centroid_frame(assigned.sparkSession, index.centroids)),
-                "_cell",
-            )
-            if index.normalized:
-                nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-                v = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
-            v = F.zip_with(v, F.col("_cen"), lambda x, c: x - c)
-        norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-        fields = [
-            T.StructField(index.id_col, next(f for f in sample.fields if f.name == index.id_col).dataType, True),
-            T.StructField(index.vec_col, T.ArrayType(T.LongType()), True),
-            T.StructField("_scale", T.DoubleType(), True),
-            T.StructField("_cell", T.IntegerType(), False),
-        ]
-        sel = [
-            F.col(index.id_col),
-            rq1_code_col(v, dim).alias(index.vec_col),
-            norm.alias("_scale"),
-            F.col("_cell"),
-        ]
-    elif quantize == "sq8":
-        v = F.col(index.vec_col).cast("array<double>")
-        scale = F.greatest(
-            F.aggregate(v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))) / F.lit(127.0),
-            F.lit(1e-30),
-        )
-        fields = [
-            T.StructField(index.id_col, next(f for f in sample.fields if f.name == index.id_col).dataType, True),
-            T.StructField(index.vec_col, T.ArrayType(T.IntegerType()), True),
-            T.StructField("_scale", T.DoubleType(), True),
-            T.StructField("_cell", T.IntegerType(), False),
-        ]
-        sel = [
-            F.col(index.id_col),
-            F.transform(v, lambda x: F.round(x / scale).cast("int")).alias(index.vec_col),
-            scale.alias("_scale"),
-            F.col("_cell"),
-        ]
-    elif quantize is None:
-        fields = [f for f in sample.fields if f.name in (index.id_col, index.vec_col)]
-        fields = fields + [T.StructField("_cell", T.IntegerType(), False)]
-        sel = [F.col(index.id_col), F.col(index.vec_col), F.col("_cell")]
-    else:
-        raise ValueError(
-            f"unknown quantize mode {quantize!r} (None, 'sq8', 'rq1', or 'rq1c')"
-        )
-    schema = T.StructType(fields)
-    t = LakeTable.create(
-        root,
-        schema,
-        partition_by=["_cell"],
-        properties={
-            "ivf.centroids": json.dumps([[float(x) for x in c] for c in index.centroids]),
-            "ivf.id_col": index.id_col,
-            "ivf.vec_col": index.vec_col,
-            "ivf.normalized": "true" if index.normalized else "false",
-            "ivf.quantize": quantize or "none",
-            "ivf.dim": str(dim),
-        },
-    )
-    t.append(assigned.select(*sel))
+    and one that doesn't. ``quantize="rq1c"`` codes the residual against the
+    cell centroid instead (the actual RaBitQ shape, see _encode)."""
+    props = {
+        "ivf.centroids": json.dumps([[float(x) for x in c] for c in index.centroids]),
+        "ivf.id_col": index.id_col,
+        "ivf.vec_col": index.vec_col,
+        "ivf.normalized": "true" if index.normalized else "false",
+        "ivf.quantize": quantize or "none",
+        "ivf.dim": str(len(index.centroids[0])),
+    }
+    stored, schema = _encode(index.assigned, _index_config(props))
+    t = LakeTable.create(root, schema, partition_by=["_cell"], properties=props)
+    t.append(stored)
     # sizing metadata for the drift gates: rows from the manifests (no scan)
     t.update_properties({
         "ivf.indexed_rows": str(sum(f.records for f in t.files())),
@@ -165,74 +216,24 @@ def ivf_append(table: LakeTable, new_vectors: DataFrame, recluster_on_drift: boo
     Assignment is a pure JVM expression: per-centroid squared L2 distance
     via zip_with against the centroid literals (normalized first when the
     index is spherical), cell = position of the array minimum — no Python,
-    no ML model object needed on the executors. Returns the commit
-    Snapshot (of the recluster overwrite when the gate fired)."""
-    props = table.meta.properties
-    centroids = json.loads(props["ivf.centroids"])
-    id_col, vec_col = props["ivf.id_col"], props["ivf.vec_col"]
-    normalized = props.get("ivf.normalized") == "true"
-    v = F.col(vec_col).cast("array<double>")
-    if normalized:
-        nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-        v = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
+    no ML model object needed on the executors. The vectors are stored
+    through the same _encode as the build. Returns the commit Snapshot (of
+    the recluster overwrite when the gate fired)."""
+    cfg = _index_config(table.meta.properties)
+    v = F.col(cfg.vec_col).cast("array<double>")
+    # a projection of its own, so each row is normalized once, not once per
+    # centroid distance that reads it
+    points = new_vectors.withColumn("_u", _unit(v) if cfg.normalized else v)
     dists = F.array(*[
         F.aggregate(
-            F.zip_with(v, F.array(*[F.lit(float(c)) for c in cen]), lambda x, c: (x - c) * (x - c)),
+            F.zip_with(F.col("_u"), F.array(*[F.lit(float(c)) for c in cen]), lambda x, c: (x - c) * (x - c)),
             F.lit(0.0),
             lambda a, d: a + d,
         )
-        for cen in centroids
+        for cen in cfg.centroids
     ])
-    cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int").alias("_cell")
-    quant = props.get("ivf.quantize", "none")
-    if quant == "sq8":
-        # quantize appended vectors exactly like the build did, so the table
-        # stays schema- and semantics-uniform
-        raw = F.col(vec_col).cast("array<double>")
-        scale = F.greatest(
-            F.aggregate(raw, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))) / F.lit(127.0),
-            F.lit(1e-30),
-        )
-        assigned = new_vectors.select(
-            F.col(id_col),
-            F.transform(raw, lambda x: F.round(x / scale).cast("int")).alias(vec_col),
-            scale.alias("_scale"),
-            cell,
-        )
-    elif quant in ("rq1", "rq1c"):
-        from octocode_spark.operators.ann import rq1_code_col
-
-        dim = int(props["ivf.dim"])
-        raw = F.col(vec_col).cast("array<double>")
-        if quant == "rq1c":
-            coded = raw
-            if normalized:
-                nrm2 = F.sqrt(F.aggregate(raw, F.lit(0.0), lambda a, x: a + x * x))
-                coded = F.when(nrm2 > 0, F.transform(raw, lambda x: x / nrm2)).otherwise(raw)
-            with_cell = new_vectors.withColumn("_cell", cell).join(
-                F.broadcast(_centroid_frame(new_vectors.sparkSession, centroids)), "_cell"
-            )
-            res = F.zip_with(coded, F.col("_cen"), lambda x, c: x - c)
-            norm = F.sqrt(F.aggregate(res, F.lit(0.0), lambda a, x: a + x * x))
-            assigned = with_cell.select(
-                F.col(id_col),
-                rq1_code_col(res, dim).alias(vec_col),
-                norm.alias("_scale"),
-                F.col("_cell"),
-            )
-        else:
-            norm = F.sqrt(F.aggregate(raw, F.lit(0.0), lambda a, x: a + x * x))
-            assigned = new_vectors.select(
-                F.col(id_col),
-                rq1_code_col(raw, dim).alias(vec_col),
-                norm.alias("_scale"),
-                cell,
-            )
-    elif quant in ("none", ""):
-        assigned = new_vectors.select(F.col(id_col), F.col(vec_col), cell)
-    else:
-        raise ValueError(f"ivf_append: unsupported quantize mode {quant!r}")
-    snap = table.append(assigned)
+    cell = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
+    snap = table.append(_encode(points.withColumn("_cell", cell), cfg)[0])
     if recluster_on_drift and ivf_needs_recluster(table):
         snap = ivf_recluster(new_vectors.sparkSession, table)
     return snap
@@ -242,121 +243,33 @@ def ivf_needs_recluster(table: LakeTable) -> bool:
     """True when the corpus drifted past the trained layout: >50% row growth
     since training, or the cell count is >50% off today's adaptive optimum.
     Pure metadata — manifests for rows, properties for the trained state."""
-    from octocode_spark.operators.ann import (
-        calculate_ivf_params,
-        needs_reindex,
-        should_recreate_index,
-    )
-
     table.refresh()
-    props = table.meta.properties
-    indexed_rows = int(props.get("ivf.indexed_rows", "0"))
+    cfg = _index_config(table.meta.properties)
     current_rows = sum(f.records for f in table.files())
-    if needs_reindex(current_rows, indexed_rows):
+    if needs_reindex(current_rows, cfg.indexed_rows):
         return True
-    n_clusters = int(props.get("ivf.n_clusters", "0")) or len(json.loads(props["ivf.centroids"]))
-    return should_recreate_index(n_clusters, calculate_ivf_params(current_rows))
-
-
-def _read_dequantized(spark: SparkSession, table: LakeTable) -> DataFrame:
-    """(id_col, vec_col array<double>) view of the stored corpus, decoding
-    whatever quantization the index carries."""
-    props = table.meta.properties
-    id_col, vec_col = props["ivf.id_col"], props["ivf.vec_col"]
-    df = table.read(spark)
-    quant = props.get("ivf.quantize")
-    if quant == "sq8":
-        df = df.withColumn(
-            vec_col, F.transform(F.col(vec_col), lambda q: q.cast("double") * F.col("_scale"))
-        )
-    elif quant in ("rq1", "rq1c"):
-        # sign reconstruction v̂_i = (±1) · scale/√dim — all the code retains;
-        # ample for re-training a COARSE quantizer (directions survive,
-        # magnitudes are per-vector uniform). Centered codes add the cell
-        # centroid back (the code stored the residual's signs).
-        import math
-
-        dim = int(props["ivf.dim"])
-        code = F.col(vec_col)
-        sign_part = F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda i: (
-                F.getbit(
-                    F.element_at(code, F.floor(i / F.lit(64)).cast("int") + F.lit(1)),
-                    i % F.lit(64),
-                ).cast("double") * F.lit(2.0) - F.lit(1.0)
-            ) * F.col("_scale") / F.lit(math.sqrt(dim)),
-        )
-        if quant == "rq1c":
-            centroids = json.loads(props["ivf.centroids"])
-            df = df.join(F.broadcast(_centroid_frame(spark, centroids)), "_cell")
-            df = df.withColumn(vec_col, F.zip_with(sign_part, F.col("_cen"), lambda s, c: s + c))
-        else:
-            df = df.withColumn(vec_col, sign_part)
-    return df.select(id_col, vec_col)
+    return should_recreate_index(cfg.n_clusters, calculate_ivf_params(current_rows))
 
 
 def ivf_recluster(spark: SparkSession, table: LakeTable):
     """Re-train the coarse quantizer over the CURRENT corpus at the adaptive
     cell count and atomically rewrite the assignment (overwrite_all — one
     snapshot, time-travel keeps the old layout). The reference's
-    recreate-index-on-drift (vector_optimizer.rs:226-258). SQ8 indexes
-    retrain on dequantized vectors: centroid positions shift by at most the
-    SQ8 rounding noise, irrelevant to a coarse quantizer."""
-    from octocode_spark.operators.ann import build_ivf_index, calculate_ivf_params
-
-    props = dict(table.meta.properties)
-    id_col, vec_col = props["ivf.id_col"], props["ivf.vec_col"]
-    normalized = props.get("ivf.normalized") == "true"
-    quant = props.get("ivf.quantize", "none")
+    recreate-index-on-drift (vector_optimizer.rs:226-258). Quantized indexes
+    retrain on their decoded vectors: for SQ8 the centroid positions shift by
+    at most the rounding noise, irrelevant to a coarse quantizer."""
+    cfg = _index_config(table.meta.properties)
     current_rows = sum(f.records for f in table.files())
     params = calculate_ivf_params(current_rows)
-    n_clusters = params.n_clusters if params.should_create_index else max(
-        int(props.get("ivf.n_clusters", "2")), 2
-    )
-    corpus = _read_dequantized(spark, table)
+    n_clusters = params.n_clusters if params.should_create_index else max(cfg.n_clusters, 2)
     index = build_ivf_index(
-        corpus, n_clusters, id_col=id_col, vec_col=vec_col, cache=False, normalize=normalized
+        _decode(table.read(spark), cfg), n_clusters, id_col=cfg.id_col, vec_col=cfg.vec_col,
+        cache=False, normalize=cfg.normalized,
     )
-    if quant == "sq8":
-        v = F.col(vec_col).cast("array<double>")
-        scale = F.greatest(
-            F.aggregate(v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))) / F.lit(127.0),
-            F.lit(1e-30),
-        )
-        sel = [
-            F.col(id_col),
-            F.transform(v, lambda x: F.round(x / scale).cast("int")).alias(vec_col),
-            scale.alias("_scale"),
-            F.col("_cell"),
-        ]
-    elif quant in ("rq1", "rq1c"):
-        from octocode_spark.operators.ann import rq1_code_col
-
-        dim = int(props["ivf.dim"])
-        v = F.col(vec_col).cast("array<double>")
-        if quant == "rq1c":
-            if normalized:
-                nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-                v = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
-            v = F.zip_with(v, F.col("_cen"), lambda x, c: x - c)
-        norm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
-        sel = [
-            F.col(id_col),
-            rq1_code_col(v, dim).alias(vec_col),
-            norm.alias("_scale"),
-            F.col("_cell"),
-        ]
-    else:
-        sel = [F.col(id_col), F.col(vec_col), F.col("_cell")]
-    reassigned = index.assigned
-    if quant == "rq1c":
-        reassigned = reassigned.join(
-            F.broadcast(_centroid_frame(spark, index.centroids)), "_cell"
-        )
-    snap = table.overwrite_all(reassigned.select(*sel))
+    centroids = [[float(x) for x in c] for c in index.centroids]
+    snap = table.overwrite_all(_encode(index.assigned, cfg._replace(centroids=centroids))[0])
     table.update_properties({
-        "ivf.centroids": json.dumps([[float(x) for x in c] for c in index.centroids]),
+        "ivf.centroids": json.dumps(centroids),
         "ivf.indexed_rows": str(current_rows),
         "ivf.n_clusters": str(n_clusters),
     })
@@ -402,72 +315,53 @@ def ivf_search_persisted(
     with a PER-CELL query code: signs of (q̂ − centroid_cell), packed
     driver-side, broadcast-joined on _cell, compared with the codegen
     xor/bit_count column kernel."""
-    import math
-
-    props = table.meta.properties
-    centroids = json.loads(props["ivf.centroids"])
-    normalized = props.get("ivf.normalized") == "true"
-    id_col, vec_col = props["ivf.id_col"], props["ivf.vec_col"]
-    cells = rank_cells(centroids, query, normalized)[:n_probe]
+    cfg = _index_config(table.meta.properties)
+    id_col, vec_col, dim = cfg.id_col, cfg.vec_col, cfg.dim
+    cells = rank_cells(cfg.centroids, query, cfg.normalized)[:n_probe]
     files = probe_files(table, cells)
     cand = table.read_files(spark, files)
-    quant = props.get("ivf.quantize")
-    if quant in ("rq1", "rq1c"):
-        from octocode_spark.operators.ann import (
-            rq1_hamming,
-            rq1_hamming_cols,
-            rq1_query_code,
+    if cfg.quantize not in ("rq1", "rq1c"):
+        return brute_force_topk(_decode(cand, cfg), query, k, id_col, vec_col)
+    if cfg.quantize == "rq1c":
+        # centered codes: the query's code differs per probed cell —
+        # signs of (q̂ − centroid_cell), packed driver-side and joined in
+        # as a tiny broadcast frame keyed by _cell
+        q = [float(x) for x in query]
+        if cfg.normalized:
+            n2 = sum(x * x for x in q) ** 0.5
+            if n2 > 0:
+                q = [x / n2 for x in q]
+        qrows = [
+            (int(c), rq1_query_code([q[j] - cfg.centroids[c][j] for j in range(dim)]))
+            for c in cells
+        ]
+        qframe = spark.createDataFrame(qrows, "_cell: int, _qc: array<long>")
+        hm = rq1_hamming_cols(vec_col, "_qc", (dim + 63) // 64)
+        cand = cand.join(F.broadcast(qframe), "_cell")
+    else:
+        hm = rq1_hamming(vec_col, rq1_query_code(query))
+    probed_rows = sum(f.records for f in files)
+    short = (
+        cand.select(F.col(id_col), hm.alias("_hm"))
+        .orderBy(F.col("_hm").asc(), F.col(id_col).asc())  # TakeOrderedAndProject
+        .limit(shortlist or min(8192, max(10 * k, probed_rows // 16, 100)))
+    )
+    if rerank_vectors is not None:
+        fetched = rerank_vectors.join(F.broadcast(short.select(id_col)), id_col, "inner")
+        return brute_force_topk(fetched, query, k, id_col, vec_col)
+    if cfg.quantize == "rq1c":
+        # centered codes measure the RESIDUAL angle: cos(π·h/dim) over
+        # them does NOT approximate the query-vector cosine (a tight
+        # cluster would report ~0.0 for true-cosine-0.99 neighbors), so
+        # refuse instead of returning a semantically wrong score column
+        raise ValueError(
+            "rq1c search requires rerank_vectors: the Hamming distance is "
+            "over residual codes, whose angle estimate is not a cosine "
+            "approximation of the stored vectors"
         )
-
-        dim = int(props["ivf.dim"])
-        if quant == "rq1c":
-            # centered codes: the query's code differs per probed cell —
-            # signs of (q̂ − centroid_cell), packed driver-side and joined in
-            # as a tiny broadcast frame keyed by _cell
-            q = [float(x) for x in query]
-            if normalized:
-                n2 = sum(x * x for x in q) ** 0.5
-                if n2 > 0:
-                    q = [x / n2 for x in q]
-            qrows = [
-                (int(c), rq1_query_code([q[j] - centroids[c][j] for j in range(dim)]))
-                for c in cells
-            ]
-            qframe = spark.createDataFrame(qrows, "_cell: int, _qc: array<long>")
-            hm = rq1_hamming_cols(vec_col, "_qc", (dim + 63) // 64)
-            cand = cand.join(F.broadcast(qframe), "_cell")
-        else:
-            hm = rq1_hamming(vec_col, rq1_query_code(query))
-        probed_rows = sum(f.records for f in files)
-        short = (
-            cand.select(F.col(id_col), hm.alias("_hm"))
-            .orderBy(F.col("_hm").asc(), F.col(id_col).asc())  # TakeOrderedAndProject
-            .limit(shortlist or min(8192, max(10 * k, probed_rows // 16, 100)))
-        )
-        if rerank_vectors is not None:
-            fetched = rerank_vectors.join(F.broadcast(short.select(id_col)), id_col, "inner")
-            return brute_force_topk(fetched, query, k, id_col, vec_col)
-        if quant == "rq1c":
-            # centered codes measure the RESIDUAL angle: cos(π·h/dim) over
-            # them does NOT approximate the query-vector cosine (a tight
-            # cluster would report ~0.0 for true-cosine-0.99 neighbors), so
-            # refuse instead of returning a semantically wrong score column
-            raise ValueError(
-                "rq1c search requires rerank_vectors: the Hamming distance is "
-                "over residual codes, whose angle estimate is not a cosine "
-                "approximation of the stored vectors"
-            )
-        approx = F.round(F.cos(F.lit(math.pi) * F.col("_hm") / F.lit(float(dim))), 6)
-        return (
-            short.select(F.col(id_col), approx.alias("cosine"))
-            .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-            .limit(k)
-        )
-    cand = cand.drop("_cell")
-    if quant == "sq8":
-        # JVM-side dequantize: v̂ = q · scale, then the exact cosine re-rank
-        cand = cand.withColumn(
-            vec_col,
-            F.transform(F.col(vec_col), lambda q: q.cast("double") * F.col("_scale")),
-        ).drop("_scale")
-    return brute_force_topk(cand, query, k, id_col, vec_col)
+    approx = F.round(F.cos(F.lit(math.pi) * F.col("_hm") / F.lit(float(dim))), 6)
+    return (
+        short.select(F.col(id_col), approx.alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
+        .limit(k)
+    )

@@ -33,6 +33,24 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
 
 
+def _bind(value: Column, body) -> Column:
+    """body(value) with ``value`` evaluated once per row. A subexpression
+    inside a higher-order lambda is re-evaluated for every element (Spark
+    hoists nothing out of a lambda), so a per-row scalar used by a
+    per-element lambda enters it as this one-element array's variable.
+
+    Caveat: a column named inside ``body`` is inside a nested lambda, and
+    there Spark's lateral-alias resolution binds the name to a same-named
+    alias made earlier in the same select list. Select no such alias ahead
+    of it."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def _unit(v: Column) -> Column:
+    """v / ‖v‖, or v itself when ‖v‖ is 0 — the one L2-normalize expression."""
+    return _bind(_norm(v), lambda n: F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v))
+
+
 def cosine_sim(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
@@ -297,8 +315,7 @@ def build_ivf_index(
 
     v = F.col(vec_col).cast("array<double>")
     if normalize:
-        nrm = _norm(v)
-        v = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
+        v = _unit(v)
     feat = vectors.select(
         F.col(id_col), F.col(vec_col),
         array_to_vector(v).alias("_feat"),

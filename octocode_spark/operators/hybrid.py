@@ -76,8 +76,10 @@ def keyword_score(text: Column, terms: list[str]) -> Column:
 def tokenized_base(
     docs: DataFrame, terms: list[str], text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, _dl, _tf0.._tfK): doc length + per-query-term term frequencies,
-    pure codegen expressions over one scan."""
+    """(id, _dl, _tf0.._tfK): doc length + per-query-term term frequencies
+    over one scan. Each term frequency is an interpreted ``F.filter`` lambda
+    over the row's tokens (higher-order functions are CodegenFallback), so
+    the cost is one pass over the tokens per query term."""
     toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), 0)
 
     def _tf(term: str) -> Column:

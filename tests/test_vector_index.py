@@ -3,8 +3,11 @@ manifest-level cell pruning, and parity with the in-memory search path."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from octocode_spark.lakehouse.vector_index import (
     ivf_search_persisted,
@@ -101,7 +104,6 @@ def test_ivf_append_assigns_to_existing_centroids(spark, clustered, tmp_path):
     """Incremental append: new vectors join the persisted index via a pure
     JVM centroid-assignment expression; each lands in the numpy-argmin cell
     and becomes findable by the persisted search path."""
-    import json
 
     vecs, base = clustered
     index = build_ivf_index(vecs, n_clusters=N_CLUSTERS, cache=False)
@@ -209,7 +211,6 @@ def _vec_col_bytes(table) -> int:
 def test_rq1_code_twin_and_hamming(spark, clustered64):
     """The JVM sign-code expression and the driver-side python twin agree
     bit-for-bit, and the Hamming expression matches python popcount."""
-    from pyspark.sql import functions as F
 
     from octocode_spark.operators.ann import rq1_code_col, rq1_hamming, rq1_query_code
 
@@ -355,7 +356,6 @@ def test_ivf_append_drift_triggers_recluster(spark, clustered, tmp_path):
     """>50% growth through ivf_append re-trains the quantizer: centroids and
     indexed_rows update, the table is rewritten in one snapshot, and search
     still finds both old and new vectors."""
-    import json
 
     from octocode_spark.lakehouse.vector_index import (
         ivf_append,
@@ -482,3 +482,101 @@ def test_rq1c_refuses_hamming_only_estimate(spark, clustered64, tmp_path):
     t = persist_ivf_index(index, str(tmp_path / "rq1c_ref"), quantize="rq1c")
     with pytest.raises(ValueError, match="rerank_vectors"):
         ivf_search_persisted(spark, t, [float(x) for x in base[0]], k=5, n_probe=2)
+
+
+@pytest.mark.parametrize("mode", [None, "sq8", "rq1", "rq1c"])
+def test_append_encodes_like_build(spark, clustered64, tmp_path, mode):
+    """An appended vector is stored exactly as the build stores it: persisting
+    A∪B and persisting A then ivf_append-ing B leave the same rows. The index
+    is built by hand (fixed unit centroids, numpy-argmin cells), so both
+    sides share one assignment and only the stored form is compared."""
+    from octocode_spark.lakehouse.vector_index import ivf_append
+    from octocode_spark.operators.ann import IvfIndex
+
+    vecs, base = clustered64
+    cents = [c / np.linalg.norm(c) for c in base]
+    rows = [(r["vec_id"], r["embedding"]) for r in vecs.collect()]
+    cells = [
+        int(np.argmin([np.linalg.norm(c - np.asarray(v) / np.linalg.norm(v)) for c in cents]))
+        for _, v in rows
+    ]
+    assigned = spark.createDataFrame(
+        [(vid, v, cell) for (vid, v), cell in zip(rows, cells)],
+        "vec_id: long, embedding: array<double>, _cell: int",
+    )
+    in_b = F.col("vec_id") % 5 == 0
+
+    def index_of(df):
+        return IvfIndex(cents, df, "vec_id", "embedding", normalized=True)
+
+    full = persist_ivf_index(index_of(assigned), str(tmp_path / "full"), quantize=mode)
+    grown = persist_ivf_index(index_of(assigned.filter(~in_b)), str(tmp_path / "grown"), quantize=mode)
+    ivf_append(grown, vecs.filter(in_b), recluster_on_drift=False)
+    grown.refresh()
+    a, b = full.read(spark), grown.read(spark).select(*full.read(spark).columns)
+    assert a.count() == len(rows)
+    assert a.filter(" OR ".join(f"{c} IS NULL" for c in a.columns)).count() == 0
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+
+
+def _lambdas_with_aggregate(plan) -> list[str]:
+    """Lambda bodies in an optimized plan that contain an ArrayAggregate: a
+    fold evaluated once per element of the array the lambda walks."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def has_agg(e):
+        return e.getClass().getSimpleName() == "ArrayAggregate" or any(has_agg(c) for c in seq(e.children()))
+
+    def walk(e):
+        if e.getClass().getSimpleName() == "LambdaFunction":
+            found = [e.toString()] if has_agg(e.function()) else []
+            return found + [x for a in seq(e.arguments()) for x in walk(a)]
+        return [x for c in seq(e.children()) for x in walk(c)]
+
+    return [x for e in seq(plan.expressions()) for x in walk(e)] + [
+        x for c in seq(plan.children()) for x in _lambdas_with_aggregate(c)
+    ]
+
+
+def test_normalize_and_sq8_encode_bind_per_row_scalars_once(spark, clustered):
+    """The norm of `_unit` and the SQ8 scale are evaluated once per row: a
+    subexpression inside a higher-order lambda is re-evaluated for every
+    element, which made both O(dim²) per row."""
+    from octocode_spark.lakehouse.vector_index import _encode, _index_config
+    from octocode_spark.operators.ann import _unit
+
+    vecs, base = clustered
+    unit = vecs.select(_unit(F.col("embedding")).alias("u"))
+    assert _lambdas_with_aggregate(unit._jdf.queryExecution().optimizedPlan()) == []
+    cfg = _index_config({
+        "ivf.centroids": json.dumps([[float(x) for x in c] for c in base]),
+        "ivf.id_col": "vec_id",
+        "ivf.vec_col": "embedding",
+        "ivf.quantize": "sq8",
+        "ivf.dim": "16",
+    })
+    sq8, _ = _encode(vecs.withColumn("_cell", F.lit(0)), cfg)
+    assert _lambdas_with_aggregate(sq8._jdf.queryExecution().optimizedPlan()) == []
+    # the bound forms compute what the inline forms did, bit for bit
+    v = F.col("embedding")
+    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda a, x: a + x * x))
+    inline = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
+    assert vecs.select(_unit(v)).exceptAll(vecs.select(inline)).count() == 0
+
+
+def test_ivf_append_plan_binds_per_row_scalars_once(spark, clustered, tmp_path, monkeypatch):
+    """ivf_append into a spherical SQ8 index normalizes each row once, not
+    once per centroid distance, and binds the SQ8 scale once per row."""
+    from octocode_spark.lakehouse.vector_index import ivf_append
+
+    vecs, _ = clustered
+    index = build_ivf_index(vecs, n_clusters=N_CLUSTERS, cache=False)
+    t = persist_ivf_index(index, str(tmp_path / "plan"), quantize="sq8")
+    appended = []
+    monkeypatch.setattr(t, "append", appended.append)
+    ivf_append(t, vecs.limit(8), recluster_on_drift=False)
+    (df,) = appended
+    assert _lambdas_with_aggregate(df._jdf.queryExecution().optimizedPlan()) == []
