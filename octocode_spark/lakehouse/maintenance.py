@@ -50,7 +50,7 @@ TARGET_FILE_SIZE = 512 * 1024 * 1024  # north-star 512MB bin-pack target
 
 @dataclass
 class PartitionPlan:
-    partition: dict[str, str]
+    partition: dict[str, str]  # the inputs' partition dict; {} without inputs
     key: str
     inputs: list[DataFile]
     target_files: int
@@ -337,6 +337,9 @@ def rewrite_partitions(
     A partition above the bound is a group of its own. Commits and ledger
     rows stay per partition, so a killed job loses at most one group's
     uncommitted partitions.
+
+    ``target_file_size`` is ignored: each planned partition already carries
+    its ``target_files`` (``plan_compaction``'s argument sets them).
     """
     bound = max(1, max_concurrency) * spark.sparkContext.defaultParallelism
     return _rewrite_packed(spark, table, plan, ledger, op, cluster_by, bound, fail_after)

@@ -18,13 +18,20 @@ Execution, Spark-first:
    task the straggler. AQE skew-join splitting is on; for the matched-key
    join we additionally broadcast the source keys when they fit (classic
    small-dim broadcast, J2) or salt with SALT_BUCKETS otherwise.
-3. **Atomicity** — one snapshot replaces rewritten files + adds inserts.
-   Optionally per-partition snapshots for ledger-grained resume.
+3. **Layout** — survivors ∪ upserts go through the compaction router
+   (``maintenance._route``) in one ``repartitionById`` shuffle: every
+   partition the MERGE writes gets exactly ceil(estimated bytes /
+   TARGET_FILE_SIZE) files, so maintenance has no per-partition sliver to
+   fold afterwards. Nothing is sampled, so the anti-join child runs once.
+4. **Atomicity** — one snapshot replaces rewritten files + adds inserts; its
+   summary counts the files added and the partitions written. A ledger
+   gets one row per written partition, all naming that snapshot.
 """
 
 from __future__ import annotations
 
 import bisect
+import math
 import os
 from dataclasses import dataclass
 
@@ -33,7 +40,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from octocode_spark.lakehouse.ledger import Ledger
-from octocode_spark.lakehouse.table import LakeTable, partition_key
+from octocode_spark.lakehouse.maintenance import TARGET_FILE_SIZE, PartitionPlan, _route
+from octocode_spark.lakehouse.metadata import DataFile
+from octocode_spark.lakehouse.table import LakeTable, partition_key, partition_key_col
 
 # broadcast the source-key set up to this many keys; beyond it, shuffle join
 # with AQE skew splitting (at 10^12-row scale the planner threshold maps to
@@ -67,6 +76,7 @@ def merge_into(
     branch: main readers see nothing until ``publish_branch`` — the full
     Write-Audit-Publish shape for a bulk upsert."""
     data_cols = [f.name for f in table.schema.fields]
+    part_cols = table.meta.partition_by
     has_delete = deleted_col in source.columns
     src = source.select(*data_cols, *( [deleted_col] if has_delete else [] )).cache()
     # fail loudly on source type drift (same policy as append's _check_schema):
@@ -77,7 +87,17 @@ def merge_into(
         dt = dict((f.name, f.dataType.simpleString()) for f in src.schema.fields)[deleted_col]
         if dt != "boolean":
             raise ValueError(f"MERGE {deleted_col!r} column must be boolean, got {dt}")
-    n_src = src.count()  # materialize once; small relative to target
+    # materialize the cache once with the one aggregate the layout needs:
+    # source rows and upsert rows per partition key (a NULL flag deletes,
+    # as the upsert filter below reads it)
+    is_upsert = ~F.col(deleted_col) if has_delete else F.lit(True)
+    src_counts = (
+        src.groupBy(partition_key_col(part_cols).alias("_pkey"))
+        .agg(F.count(F.lit(1)).alias("n"), F.count(F.when(is_upsert, 1)).alias("up"))
+        .collect()
+    )
+    n_src = sum(r["n"] for r in src_counts)
+    upsert_rows = {r["_pkey"]: r["up"] for r in src_counts if r["up"]}
 
     # ---- 1. pruning: which live files can contain a source key?
     live = table.files(snapshot_id=table.branch_head(branch) if branch else None)
@@ -100,11 +120,12 @@ def merge_into(
         candidates = []
 
     # exact confirm: semi-join target rows against source keys, collect file
-    # paths. The scan is the table's position-tagged live scan
-    # (input_file_name() rejects multi-source plans once the sidecar
-    # anti-join joins in): a row already MoR-deleted must not mark its file
-    # touched nor survive into the rewrite.
-    touched_rel: list[str] = []
+    # paths with the partition key of their rows (the key the router slots
+    # rows by, whatever the file's partition dict says). The scan is the
+    # table's position-tagged live scan (input_file_name() rejects
+    # multi-source plans once the sidecar anti-join joins in): a row already
+    # MoR-deleted must not mark its file touched nor survive into the rewrite.
+    touched: dict[str, list[DataFile]] = {}
     matched_candidates = 0
     dels = table.delete_files(snapshot_id=table.branch_head(branch) if branch else None)
     if candidates:
@@ -113,41 +134,23 @@ def merge_into(
         join_keys = F.broadcast(keys) if n_src <= BROADCAST_KEY_LIMIT else keys
         hits = (
             tgt.join(join_keys, on=key, how="left_semi")
-            .groupBy("_dfile").agg(F.count(F.lit(1)).alias("n"))
+            .groupBy("_dfile", partition_key_col(part_cols).alias("_pkey"))
+            .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
         matched_candidates = sum(r["n"] for r in hits)
-        basename_to_rel = {os.path.basename(f.path): f.path for f in candidates}
-        touched_rel = [basename_to_rel[r["_dfile"]] for r in hits]
+        by_basename = {os.path.basename(f.path): f for f in candidates}
+        for r in hits:
+            touched.setdefault(r["_pkey"], []).append(by_basename[r["_dfile"]])
+    touched_files = [f for files in touched.values() for f in files]
+    touched_rel = [f.path for f in touched_files]
 
     # ---- 2. rewrite touched files: drop matched keys, then union upserts
-    rel_to_file = {f.path: f for f in live}
-    touched_files = [rel_to_file[p] for p in touched_rel]
     upserts = src
     if has_delete:
         upserts = src.filter(~F.col(deleted_col))
     upserts = upserts.select(*data_cols)
 
-    # Output layout WITHOUT re-reading the fat anti-join child. The old shape
-    # repartitionByRange(new_data) sampled its child for range bounds, which
-    # re-executed the touched-file scan + anti-join — the documented
-    # double-evaluation trap (the clustered rewrite got the routed fix first).
-    # Instead each side keeps a layout that is already partition-dir-pure:
-    # - survivors stay scan-aligned: the broadcast anti-join adds no shuffle,
-    #   so write tasks mirror the touched files (partition-pure, ~input-sized;
-    #   bin-packing slivers is maintenance's job, as in Iceberg CoW MERGE);
-    # - only the UPSERT side is range-partitioned on (partition cols, key) —
-    #   its repartitionByRange double-evaluates a CACHED DataFrame, which is
-    #   a cache read, not a table re-scan. This kills the sliver-per-
-    #   partition-dir problem where it actually arises (source rows span many
-    #   partitions per task) at zero extra scan cost.
-    from octocode_spark.lakehouse.maintenance import TARGET_FILE_SIZE
-
-    touched_bytes = sum(f.bytes for f in touched_files)
-    est_src_bytes = int(touched_bytes / max(matched_candidates, 1)) * n_src if matched_candidates else n_src * 4096
-    n_up = max(1, -(-est_src_bytes // TARGET_FILE_SIZE))
-    range_cols = [*table.meta.partition_by, key]
-    upserts = upserts.repartitionByRange(n_up, *range_cols)
     if touched_files:
         # read_files with the SNAPSHOT's sidecars: pending MoR deletes on
         # touched files are baked into the rewrite, not resurrected
@@ -160,8 +163,18 @@ def merge_into(
     else:
         new_data = upserts
 
-    # route new rows into partition dirs; inserts may create new partitions
-    added = table._write_datafiles(new_data)
+    # one planned partition per touched or upserted partition key, sized
+    # from metadata: its touched bytes plus its upserts at the live files'
+    # mean row width
+    live_rows = sum(f.records for f in live)
+    row_bytes = sum(f.bytes for f in live) / live_rows if live_rows else 0
+    group = []
+    for k in sorted(touched.keys() | upsert_rows.keys()):
+        files = touched.get(k, [])
+        est = sum(f.bytes for f in files) + upsert_rows.get(k, 0) * row_bytes
+        n_files = max(1, math.ceil(est / TARGET_FILE_SIZE))
+        group.append(PartitionPlan(files[0].partition if files else {}, k, files, n_files, "merge"))
+    added = table._write_datafiles(_route(spark, new_data, group, part_cols, None)) if group else []
     snap = table.replace_files(
         touched_rel,
         added,
@@ -170,6 +183,8 @@ def merge_into(
             "source-rows": n_src,
             "files-pruned-by-stats": len(live) - len(candidates),
             "files-rewritten": len(touched_rel),
+            "files-added": len(added),
+            "partitions-written": len({partition_key(f.partition) for f in added}),
         },
         branch=branch,
         # `dels` is the sidecar set baked into the survivors scan above — a

@@ -1,6 +1,5 @@
 """Graph traversal over (nodes, edges) DataFrames — the GraphRAG analog
-(reference: adjacency cache + traversals, src/store/graphrag.rs:54-180;
-1-hop weighted expansion, src/indexer/search.rs:302-390).
+(reference: adjacency cache + traversals, src/store/graphrag.rs:54-180).
 
 Plain DataFrames + iterative joins; no GraphFrames needed. BFS is a loop of
 (frontier ⋈ edges) with an accumulated visited set — k is small (the
@@ -280,15 +279,3 @@ class AdjacencyCache:
 
     def unpersist(self) -> None:
         self.adj.unpersist()
-
-
-def weighted_neighbor_scores(edges: DataFrame, seeds: DataFrame,
-                             src: str = "src", dst: str = "dst",
-                             weight: str = "weight", confidence: str = "confidence") -> DataFrame:
-    """1-hop expansion scoring: score[neighbor] += weight·confidence over
-    edges from seed nodes (reference A4, src/indexer/search.rs:327-355)."""
-    return (
-        seeds.join(edges, seeds.id == edges[src])
-        .groupBy(F.col(dst).alias("neighbor"))
-        .agg(F.sum(F.col(weight) * F.col(confidence)).alias("score"))
-    )

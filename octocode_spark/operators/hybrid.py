@@ -62,17 +62,6 @@ def classify_query_weights(
     return default_vector_weight, default_keyword_weight
 
 
-def keyword_score(text: Column, terms: list[str]) -> Column:
-    """Raw term-frequency score (word-boundary matches) — kept as the cheap
-    pre-filter / debugging baseline; hybrid_search uses bm25_scores."""
-    words = F.split(F.lower(F.trim(text)), r"\s+")
-    score = None
-    for t in terms:
-        cnt = F.size(F.filter(words, lambda w: w == t.lower()))
-        score = cnt if score is None else score + cnt
-    return score.cast("long")
-
-
 def tokenized_base(
     docs: DataFrame, terms: list[str], text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -87,12 +87,6 @@ def fingerprint(text: Column) -> Column:
     return F.sha2(canon, 256)
 
 
-def rolling_hash64(text: Column) -> Column:
-    """64-bit rolling-style content hash (xxhash64 of the canonical form)."""
-    canon = F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-    return F.xxhash64(canon)
-
-
 def repetition_stats(text: Column) -> Column:
     """Gopher-style repetition signals as a struct:
     - dup_word_frac: 1 − distinct_words/words (word-level repetitiveness)

@@ -19,10 +19,3 @@ def formatted_plan(df: DataFrame) -> str:
 def plan_has(df: DataFrame, *needles: str) -> dict[str, bool]:
     plan = formatted_plan(df)
     return {n: (n in plan) for n in needles}
-
-
-def assert_plan(df: DataFrame, *needles: str) -> None:
-    plan = formatted_plan(df)
-    missing = [n for n in needles if n not in plan]
-    if missing:
-        raise AssertionError(f"plan is missing {missing}:\n{plan[:4000]}")

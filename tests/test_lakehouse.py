@@ -9,7 +9,7 @@ import pytest
 from octocode_spark.datagen import sequences
 from octocode_spark.functions.digest import table_digest
 from octocode_spark.lakehouse import CommitConflict, LakeTable
-from octocode_spark.lakehouse.table import stat_range_filter
+from octocode_spark.lakehouse.table import partition_key, stat_range_filter
 from tests.conftest import make_sequences_table
 
 
@@ -67,6 +67,43 @@ def test_stat_filter_skips_files(spark, tmp_table_dir):
     assert low and high
     assert {f.path for f in low}.isdisjoint({f.path for f in high})
     assert sum(f.records for f in low) == df.filter("n_tok < 100").count()
+
+
+def test_footer_harvest_tiers_agree(spark, tmp_table_dir, monkeypatch):
+    """The serial, threaded and Spark-job footer harvests of one partitioned
+    write yield the same DataFiles (partition, records, bytes, stats). The
+    tier thresholds are lowered so a few dozen files reach every tier; the
+    input is a LocalRelation, so all three writes lay out identical files."""
+    import concurrent.futures
+    import json
+
+    src = sequences(spark, 600, max_tok_cap=64)
+    df = spark.createDataFrame(src.toPandas(), src.schema)
+    t = LakeTable.create(tmp_table_dir, df.schema, partition_by=["source"], stat_cols=["n_tok", "doc_id"])
+    pools, jobs = [], []
+    orig_pool = concurrent.futures.ThreadPoolExecutor
+    monkeypatch.setattr(concurrent.futures, "ThreadPoolExecutor",
+                        lambda *a, **k: pools.append(1) or orig_pool(*a, **k))
+    SC = type(spark.sparkContext)
+    orig_parallelize = SC.parallelize
+    monkeypatch.setattr(SC, "parallelize",
+                        lambda self, *a, **k: jobs.append(1) or orig_parallelize(self, *a, **k))
+    tiers = {"serial": (10**9, 10**9, 0, 0), "threaded": (1, 10**9, 1, 0), "spark-job": (1, 1, 0, 1)}
+    harvested = {}
+    for name, (threaded_min, distributed_min, n_pools, n_jobs) in tiers.items():
+        monkeypatch.setattr(LakeTable, "HARVEST_THREADED_MIN", threaded_min)
+        monkeypatch.setattr(LakeTable, "HARVEST_DISTRIBUTED_MIN", distributed_min)
+        pools.clear()
+        jobs.clear()
+        files = t._write_datafiles(df)
+        assert (len(pools), len(jobs)) == (n_pools, n_jobs), name
+        harvested[name] = sorted(
+            (partition_key(f.partition), f.records, f.bytes, json.dumps(f.stats, sort_keys=True))
+            for f in files
+        )
+    assert len(harvested["serial"]) > 4
+    assert harvested["threaded"] == harvested["serial"]
+    assert harvested["spark-job"] == harvested["serial"]
 
 
 def test_concurrent_appends_both_commit(spark, tmp_table_dir):

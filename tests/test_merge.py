@@ -120,31 +120,87 @@ def test_merge_rejects_source_type_drift(spark, tmp_table_dir):
     assert t.read(spark).count() == 200
 
 
-def test_merge_range_partitions_only_the_cached_upserts(spark, tmp_table_dir, monkeypatch):
-    """Plan evidence for the double-scan fix: repartitionByRange (whose
-    bounds sampling re-executes its child) must be applied exactly once, to
-    the CACHED upsert side — never to the fat survivors ∪ upserts union,
-    which would re-run the touched-file scan + anti-join."""
+def test_merge_evaluates_the_anti_join_once(spark, tmp_table_dir):
+    """Plan evidence for the double-scan fix: the touched-file scan +
+    anti-join is the child of exactly one SQL execution (the write), and no
+    sampling exchange (range bounds, percentile cut points) sits over the
+    survivors ∪ upserts union — sampling would re-execute that child."""
     t = make_sequences_table(spark, tmp_table_dir, n_rows=N, small_files=8)
     updates = sequence_updates(spark, N, 400, max_tok_cap=256)
     expected = _expected_after_merge(spark, N, updates)
 
-    # patch the CONCRETE class (pyspark 4: instances are classic.DataFrame,
-    # pyspark.sql.DataFrame is the abstract base and never hit at call time)
-    DataFrame = type(updates)
-    plans = []
-    orig = DataFrame.repartitionByRange
+    store = spark._jsparkSession.sharedState().statusStore()
 
-    def spy(self, *a, **k):
-        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
-        return orig(self, *a, **k)
+    def executions():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        it = store.executionsList().iterator()
+        while it.hasNext():
+            yield it.next()
 
-    monkeypatch.setattr(DataFrame, "repartitionByRange", spy)
+    seen = {e.executionId() for e in executions()}
     merge_into(spark, t, updates)
-    assert len(plans) == 1, f"expected exactly one repartitionByRange, saw {len(plans)}"
-    assert "InMemoryRelation" in plans[0]  # child is the cached MERGE source
-    assert "Join" not in plans[0]  # NOT the anti-join output
+    plans = [e.physicalPlanDescription() for e in executions() if e.executionId() not in seen]
+    anti = [p for p in plans if "LeftAnti" in p]
+    assert len(anti) == 1, f"anti-join evaluated by {len(anti)} executions"
+    assert "rangepartitioning" not in anti[0].lower()
+    assert "percentile" not in anti[0].lower()
     assert table_digest(t.read(spark)) == table_digest(expected)
+
+
+def test_merge_writes_each_partition_its_target_files(spark, tmp_table_dir, monkeypatch):
+    """MERGE writes survivors ∪ upserts through the compaction router: each
+    partition it writes gains exactly its planned target_files — one at the
+    default target, however many files the partition held — so maintenance
+    has no sliver to fold. Covers updates, deletes, multi-file partitions and
+    inserts into a partition the table does not have yet."""
+    from octocode_spark.lakehouse import merge as merge_mod
+    from octocode_spark.lakehouse.table import partition_key
+
+    def gained(before: set[str]) -> dict[str, int]:
+        out: dict[str, int] = {}
+        for f in t.files():
+            if f.path not in before:
+                k = partition_key(f.partition)
+                out[k] = out.get(k, 0) + 1
+        return out
+
+    t = make_sequences_table(spark, tmp_table_dir, n_rows=N, small_files=16)
+    assert min(len(fs) for fs in t.partitions().values()) > 1
+    fresh = (
+        sequences(spark, 30, max_tok_cap=256)
+        .withColumn("doc_id", F.concat(F.lit("new-"), "doc_id"))
+        .withColumn("source", F.lit("brand-new"))
+        .withColumn("deleted", F.lit(False))
+    )
+    updates = sequence_updates(spark, N, 600, max_tok_cap=256).unionByName(fresh)
+    expected = _expected_after_merge(spark, N, updates)
+
+    before = {f.path for f in t.files()}
+    merge_into(spark, t, updates)
+    added = gained(before)
+    assert "source=brand-new" in added and len(added) > 2
+    assert set(added.values()) == {1}, added
+    summary = t.meta.snapshot().summary
+    assert summary["files-added"] == sum(added.values())
+    assert summary["partitions-written"] == len(added)
+    assert table_digest(t.read(spark)) == table_digest(expected)
+
+    # a smaller target splits the bigger partitions: each still gains
+    # exactly the target_files the router was planned with
+    groups = []
+    orig = merge_mod._route
+
+    def spy(spark_, df, group, *a):
+        groups.append(group)
+        return orig(spark_, df, group, *a)
+
+    monkeypatch.setattr(merge_mod, "_route", spy)
+    monkeypatch.setattr(merge_mod, "TARGET_FILE_SIZE", 48 << 10)
+    before = {f.path for f in t.files()}
+    merge_into(spark, t, sequence_updates(spark, N + 600, 300, max_tok_cap=256))
+    planned = {p.key: p.target_files for p in groups[0]}
+    assert max(planned.values()) > 1, planned
+    assert gained(before) == planned
 
 
 def test_merge_huge_source_skips_bounds_prune_broadcast(spark, tmp_table_dir, monkeypatch):

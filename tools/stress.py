@@ -9,6 +9,7 @@ Usage: [SPARK_GRAFT_STRESS_ROWS=100000] python tools/stress.py
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import sys
@@ -25,8 +26,9 @@ def main() -> None:
     from octocode_spark.datagen import sequence_updates, sequences
     from octocode_spark.functions.digest import group_counts, table_digest
     from octocode_spark.lakehouse import LakeTable, Ledger
-    from octocode_spark.lakehouse.maintenance import plan_compaction, rewrite_partitions
+    from octocode_spark.lakehouse.maintenance import TARGET_FILE_SIZE, plan_compaction, rewrite_partitions
     from octocode_spark.lakehouse.merge import merge_into
+    from octocode_spark.lakehouse.table import partition_key
 
     spark = get_spark(app="stress", driver_memory="16g")
     spark.sparkContext.setLogLevel("ERROR")
@@ -66,7 +68,18 @@ def main() -> None:
     gates["pinned_snapshot_isolated"] = table_digest(t.read(spark, snapshot_id=pin)) == golden
 
     updates = sequence_updates(spark, ROWS, ROWS // 10, max_tok_cap=2048)
+    pre_merge = {f.path for f in t.files()}
     merge_into(spark, t, updates, ledger=ledger, salt_buckets=8)
+    # every partition the MERGE wrote gained exactly its target file count,
+    # ceil(bytes written / TARGET_FILE_SIZE): no sliver beside a survivor file
+    gained: dict[str, list] = {}
+    for f in t.files():
+        if f.path not in pre_merge:
+            gained.setdefault(partition_key(f.partition), []).append(f)
+    summary = t.meta.snapshot().summary
+    gates["merge_partitions_at_target_files"] = bool(gained) and all(
+        len(fs) == max(1, math.ceil(sum(f.bytes for f in fs) / TARGET_FILE_SIZE)) for fs in gained.values()
+    ) and summary["files-added"] == sum(map(len, gained.values())) and summary["partitions-written"] == len(gained)
     expected = (
         df.join(updates.select("doc_id"), "doc_id", "left_anti")
         .unionByName(updates.filter("not deleted").drop("deleted"))
