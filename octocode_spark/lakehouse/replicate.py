@@ -19,8 +19,11 @@ window of source commits folds into ONE destination commit. Net effect per
 key, not per event — changed keys' old copies are semi-join-deleted and their
 window-end live rows re-inserted from the source head, so a key inserted then
 deleted inside the window nets to absent and a chatty 100-commit source costs
-one metadata commit instead of a commit storm. The delete sidecar and the
-insert data files land in the SAME atomic snapshot. Unlike the per-commit
+one metadata commit instead of a commit storm. It is a merge-on-read
+``merge.change_rows``, the executor MERGE and DELETE commit through: the
+delete sidecar and the inserts (routed to their partitions' target file
+counts) land in the SAME atomic snapshot, which conflicts if a racing
+compaction replaced a file the sidecar references. Unlike the per-commit
 mode, replaying a coalesced window is IDEMPOTENT (re-deleting the changed
 keys and re-inserting the same head-state rows is a fixpoint), so it is also
 the crash-recovery path.
@@ -38,7 +41,8 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from octocode_spark.lakehouse.table import LakeTable
+from octocode_spark.lakehouse.merge import change_rows
+from octocode_spark.lakehouse.table import LakeTable, partition_key_col
 
 
 def replicate_changelog(
@@ -111,29 +115,22 @@ def replicate_coalesced(
     changed = delta.select(key).dropDuplicates([key]).localCheckpoint(eager=True)
     # net inserts = the source's WINDOW-END live rows of every changed key —
     # no event-order reasoning needed, and duplicate-key sources replicate
-    # all surviving copies
-    inserts = src.read(spark, snapshot_id=head).join(changed, key, "left_semi")
-
-    # build both halves of the commit, then commit ONCE
+    # all surviving copies; one grouped count sizes their layout
+    inserts = (
+        src.read(spark, snapshot_id=head).join(changed, key, "left_semi")
+        .select(*dst.schema.names)
+    )
+    counts = inserts.groupBy(partition_key_col(dst.meta.partition_by).alias("_pkey")).count()
     files = dst.files()
-    sidecars: list = []
-    if files:
-        tagged = dst._tagged_live_scan(spark, files)
-        sidecars = dst._write_delete_sidecar(tagged.join(changed, key, "left_semi"))
-    data_files = dst._write_datafiles(inserts.select(*dst.schema.names))
-    added = sidecars + data_files
-    if not added:
-        return head
-    dst._commit(
-        "replicate",
-        added=added,
-        replaced=[],
-        summary={
-            "source-window": f"{from_snapshot_id}..{head}",
-            "mor-delete-entries": sum(f.records for f in sidecars),
-            "inserted-files": len(data_files),
-        },
-        require_live=[f.path for f in dst._sidecar_targets(sidecars, files)],
+    change_rows(
+        spark, dst, files, dst.delete_files(),
+        hits=lambda tagged: tagged.join(changed, key, "left_semi"),
+        mode="mor",
+        operation="replicate",
+        inserts=inserts,
+        insert_rows={r["_pkey"]: r["count"] for r in counts.collect()},
+        live=files,
+        summary={"source-window": f"{from_snapshot_id}..{head}"},
     )
     return head
 

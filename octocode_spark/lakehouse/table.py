@@ -311,14 +311,12 @@ class LakeTable:
             groups.setdefault(key, []).append(f)
         return groups
 
-    # harvest dispatch tiers: below THREADED_MIN a serial driver loop wins
-    # (no pool setup); between the two, a driver-side thread pool (pyarrow
-    # footer reads release the GIL and a local footer is ~1-5 ms — 110 files
-    # harvest in ~50 ms threaded vs ~600 ms as a Spark job, whose pyspark
-    # worker launch + scheduling dominated the round-5 serial tail); at
-    # DISTRIBUTED_MIN+ files (the 10^5-file 100 TB case) executor-side IO
+    # harvest dispatch tiers: below DISTRIBUTED_MIN a driver-side thread pool
+    # (pyarrow footer reads release the GIL and a local footer is ~1-5 ms —
+    # 110 files harvest in ~50 ms threaded vs ~600 ms as a Spark job, whose
+    # pyspark worker launch + scheduling dominated the round-5 serial tail);
+    # at DISTRIBUTED_MIN+ files (the 10^5-file 100 TB case) executor-side IO
     # bandwidth matters more than job overhead and the Spark job takes over
-    HARVEST_THREADED_MIN = 17
     HARVEST_DISTRIBUTED_MIN = 4096
 
     # ------------------------------------------------------------------ write
@@ -335,11 +333,12 @@ class LakeTable:
         not stored on the table, so concurrent writers never see each other's.
 
         The stat harvest (per-file rows/bytes/min-max from parquet FOOTERS)
-        runs as a Spark job over the file list when the commit adds more than
-        a handful of files — what Iceberg gets from its write tasks. At 100 TB
-        / 10^5 output files the driver keeps only the rename loop (zero-copy
-        metadata step) and the manifest+CAS; footer IO is executor-side. The
-        harvest closure is self-contained (no package import on workers)."""
+        runs in a driver thread pool, or as a Spark job over the file list
+        once the write adds HARVEST_DISTRIBUTED_MIN files — what Iceberg gets
+        from its write tasks. At 100 TB / 10^5 output files the driver keeps
+        only the rename loop (zero-copy metadata step) and the manifest+CAS;
+        footer IO is executor-side. The harvest closure is self-contained (no
+        package import on workers)."""
         t_w0 = time.monotonic()
         staging = os.path.join(self.root, "_tmp", uuid.uuid4().hex)
         part_cols = self.meta.partition_by
@@ -438,13 +437,11 @@ class LakeTable:
             # parallelism for the 10^5-file case.
             slices = max(1, min(sc.defaultParallelism * 2, len(moved) // 16))
             payloads = sc.parallelize(moved, numSlices=slices).map(harvest_one).collect()
-        elif len(moved) >= self.HARVEST_THREADED_MIN:
+        else:
             from concurrent.futures import ThreadPoolExecutor
 
-            with ThreadPoolExecutor(max_workers=min(32, len(moved))) as pool:
+            with ThreadPoolExecutor(max_workers=max(1, min(32, len(moved)))) as pool:
                 payloads = list(pool.map(harvest_one, moved))
-        else:
-            payloads = [harvest_one(mp) for mp in moved]
         dfiles = [
             DataFile(path=rel, partition=part, records=rec, bytes=size, stats=stats)
             for rel, part, rec, size, stats in payloads
@@ -833,7 +830,9 @@ class LakeTable:
         rows back in) and raises CommitConflict to re-plan, the same
         contract as Iceberg's positional-delete validation.
 
-        Copy-on-write: rewrite only files containing matching rows.
+        Copy-on-write: rewrite only files containing matching rows; each
+        partition they touch is rewritten at its target file count, as MERGE
+        writes (both run ``merge.change_rows``).
 
         ``predicate`` is a Column. File selection prunes METADATA-FIRST —
         ``prune_partition_filter`` / ``prune_stat_filter`` (e.g.
@@ -857,20 +856,18 @@ class LakeTable:
         """
         from pyspark.sql import functions as F
 
-        if mode not in ("cow", "mor"):
-            raise ValueError(f"delete_where: unknown mode {mode!r} ('cow' or 'mor')")
+        from octocode_spark.lakehouse.merge import change_rows
+
         pred_true = F.coalesce(predicate.cast("boolean"), F.lit(False))
         files = self.files(
             partition_filter=prune_partition_filter, stat_filter=prune_stat_filter
         )
-        if not files:
-            return None
-        return self._delete_from_scan(
-            spark, files,
-            select_hits=lambda tagged: tagged.filter(pred_true),
-            keep_rows=lambda df: df.filter(~pred_true),
-            mode=mode,
-        )
+        return change_rows(
+            spark, self, files, self.delete_files(),
+            hits=lambda tagged: tagged.filter(pred_true),
+            keep=lambda df: df.filter(~pred_true),
+            mode=mode, operation="delete",
+        ).snapshot
 
     def delete_where_keys(
         self,
@@ -900,16 +897,15 @@ class LakeTable:
                 f"delete_where_keys: keys columns {key_cols} must be non-empty "
                 f"table columns (unknown: {missing})"
             )
-        files = self.files()
-        if not files:
-            return None
+        from octocode_spark.lakehouse.merge import change_rows
+
         kd = keys.dropDuplicates(key_cols)
-        return self._delete_from_scan(
-            spark, files,
-            select_hits=lambda tagged: tagged.join(kd, key_cols, "left_semi"),
-            keep_rows=lambda df: df.join(kd, key_cols, "left_anti"),
-            mode=mode,
-        )
+        return change_rows(
+            spark, self, self.files(), self.delete_files(),
+            hits=lambda tagged: tagged.join(kd, key_cols, "left_semi"),
+            keep=lambda df: df.join(kd, key_cols, "left_anti"),
+            mode=mode, operation="delete",
+        ).snapshot
 
     def _tagged_live_scan(
         self,
@@ -922,11 +918,12 @@ class LakeTable:
         with the ``_sidecar_frame`` entries of pending delete sidecars
         anti-joined out (broadcast). This is THE canonical MoR keying
         plumbing, the only place a data row's sidecar key is built:
-        ``read_files`` (which drops the tags), MERGE's confirm scan,
-        ``changelog_read``'s deleted-row recovery, and the sidecar writers
-        (``_delete_from_scan``, replication, via ``_write_delete_sidecar``)
-        all build on it. ``delete_files=None`` uses the current snapshot's
-        sidecars; ``[]`` tags the raw rows."""
+        ``read_files`` (which drops the tags), ``changelog_read``'s
+        deleted-row recovery, and ``merge.change_rows`` — the row-level
+        change executor behind MERGE, DELETE and coalesced replication,
+        whose hit scan it is and whose sidecars ``_write_delete_sidecar``
+        writes — all build on it. ``delete_files=None`` uses the current
+        snapshot's sidecars; ``[]`` tags the raw rows."""
         from pyspark.sql import functions as F
 
         paths = [os.path.join(self.root, f.path) for f in files]
@@ -948,47 +945,6 @@ class LakeTable:
 
         return spark.read.parquet(*[os.path.join(self.root, f.path) for f in sidecars]).select(
             F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos")
-        )
-
-    def _delete_from_scan(
-        self,
-        spark: SparkSession,
-        files: list[DataFile],
-        select_hits,
-        keep_rows,
-        mode: str,
-    ) -> Snapshot | None:
-        """Shared DELETE executor: ``select_hits`` narrows the tagged live
-        scan to the doomed rows, then either a MoR sidecar commit or a CoW
-        keep-rewrite of the hit files (neither mode can re-delete or
-        resurrect a row another sidecar already removed — the tagged scan
-        excludes pending sidecar entries)."""
-        existing = self.delete_files()
-        tagged = self._tagged_live_scan(spark, files, delete_files=existing)
-        if mode == "mor":
-            added = self._write_delete_sidecar(select_hits(tagged))
-            if not added:
-                return None
-            return self._commit(
-                "delete", added=added, replaced=[],
-                summary={"mor-delete-entries": sum(f.records for f in added)},
-                require_live=[f.path for f in self._sidecar_targets(added, files)],
-            )
-        hit_names = [
-            r["_dfile"] for r in select_hits(tagged).select("_dfile").distinct().collect()
-        ]
-        if not hit_names:
-            return None
-        known_sidecars = {f.path for f in existing}
-        by_name = {os.path.basename(f.path): f for f in files}
-        hit_dfs = [by_name[n] for n in hit_names]
-        # read_files (not a raw scan) so pending MoR sidecar entries on the
-        # hit files are baked into the rewrite instead of resurrected
-        keep_df = keep_rows(self.read_files(spark, hit_dfs, delete_files=existing))
-        added = self._write_datafiles(keep_df)
-        return self._commit(
-            "delete", added=added, replaced=[f.path for f in hit_dfs],
-            known_sidecars=known_sidecars,
         )
 
     def _write_delete_sidecar(self, hits: DataFrame) -> list[DataFile]:

@@ -30,6 +30,57 @@ def test_delete_where_rewrites_only_hit_files(spark, tmp_table_dir):
     assert before_other <= after
 
 
+def test_delete_where_writes_each_partition_its_target_files(spark, tmp_table_dir, monkeypatch):
+    """A copy-on-write DELETE writes its survivors through the compaction
+    router: each partition it touches gains exactly its planned target file
+    count — one at the default target, however many scan tasks read the
+    partition's hit files — and several with a small target."""
+    from octocode_spark.lakehouse import merge as merge_mod
+    from octocode_spark.lakehouse.table import partition_key
+
+    def gained(before: set[str]) -> dict[str, int]:
+        out: dict[str, int] = {}
+        for f in t.files():
+            if f.path not in before:
+                k = partition_key(f.partition)
+                out[k] = out.get(k, 0) + 1
+        return out
+
+    n = 2500
+    t = make_sequences_table(spark, tmp_table_dir, n_rows=n, small_files=16)
+    biggest = max(t.partitions().values(), key=len)
+    scan = spark.read.parquet(*[f"{t.root}/{f.path}" for f in biggest])
+    assert scan.rdd.getNumPartitions() > 1  # one partition's files, several tasks
+
+    before = {f.path for f in t.files()}
+    pred = F.col("n_tok") % 7 == 0
+    t.delete_where(spark, pred)
+    added = gained(before)
+    assert len(added) > 2 and set(added.values()) == {1}, added
+    summary = t.meta.snapshot().summary
+    assert summary["files-added"] == sum(added.values())
+    assert summary["partitions-written"] == len(added)
+    expected = sequences(spark, n, max_tok_cap=256).filter(~pred)
+    assert table_digest(t.read(spark)) == table_digest(expected)
+
+    groups = []
+    orig = merge_mod._route
+
+    def spy(spark_, df, group, *a):
+        groups.append(group)
+        return orig(spark_, df, group, *a)
+
+    monkeypatch.setattr(merge_mod, "_route", spy)
+    monkeypatch.setattr(merge_mod, "TARGET_FILE_SIZE", 48 << 10)
+    before = {f.path for f in t.files()}
+    pred2 = F.col("n_tok") % 5 == 0
+    t.delete_where(spark, pred2)
+    planned = {p.key: p.target_files for p in groups[0]}
+    assert max(planned.values()) > 1, planned
+    assert gained(before) == planned
+    assert table_digest(t.read(spark)) == table_digest(expected.filter(~pred2))
+
+
 def test_delete_where_no_match_is_noop(spark, tmp_table_dir):
     t = make_sequences_table(spark, tmp_table_dir, n_rows=500, small_files=4)
     pre = table_digest(t.read(spark))
@@ -520,6 +571,43 @@ def test_replicate_coalesced_one_commit_equals_per_commit(spark, tmp_path):
     # coalesced replay is IDEMPOTENT (the crash-recovery property)
     replicate_coalesced(spark, src, d2, cursor, key="doc_id")
     assert table_digest(d2.read(spark)) == table_digest(d1.read(spark))
+
+
+def test_replicate_coalesced_conflicts_with_racing_compaction(spark, tmp_path, monkeypatch):
+    """A compaction that commits between replication's sidecar write and its
+    commit replaces the data file the sidecar references: the one
+    destination commit must raise CommitConflict and leave the destination
+    as it was (Iceberg's validateDataFilesExist)."""
+    from octocode_spark.lakehouse.maintenance import plan_compaction, rewrite_partitions
+    from octocode_spark.lakehouse.replicate import replicate_coalesced
+    from octocode_spark.lakehouse.table import CommitConflict
+
+    src = make_sequences_table(spark, str(tmp_path / "src"), n_rows=300, small_files=3)
+    cursor = src.meta.current_snapshot_id
+    dst = src.export_snapshot(str(tmp_path / "dst"))
+    victim = src.read(spark).select("doc_id").first()["doc_id"]
+    src.delete_where(spark, F.col("doc_id") == victim, mode="mor")
+    src.append(sequences(spark, 10, max_tok_cap=32).withColumn(
+        "doc_id", F.concat(F.lit("race-"), F.col("doc_id"))))
+    before = table_digest(dst.read(spark))
+
+    raced = []
+    orig = LakeTable._write_datafiles
+
+    def racing_write(self, df, *a, **k):
+        if not raced:  # the sidecar is written, the commit not yet made
+            raced.append(1)
+            other = LakeTable.load(dst.root)
+            rewrite_partitions(
+                spark, other, plan_compaction(other, target_file_size=1 << 30, force=True)
+            )
+        return orig(self, df, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "_write_datafiles", racing_write)
+    with pytest.raises(CommitConflict, match="replaced concurrently"):
+        replicate_coalesced(spark, src, dst, cursor, key="doc_id")
+    assert raced
+    assert table_digest(LakeTable.load(dst.root).read(spark)) == before
 
 
 def test_watch_replicate_bounded_error_cap(spark, tmp_path, monkeypatch):

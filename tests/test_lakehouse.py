@@ -70,10 +70,10 @@ def test_stat_filter_skips_files(spark, tmp_table_dir):
 
 
 def test_footer_harvest_tiers_agree(spark, tmp_table_dir, monkeypatch):
-    """The serial, threaded and Spark-job footer harvests of one partitioned
-    write yield the same DataFiles (partition, records, bytes, stats). The
-    tier thresholds are lowered so a few dozen files reach every tier; the
-    input is a LocalRelation, so all three writes lay out identical files."""
+    """The threaded and Spark-job footer harvests of one partitioned write
+    yield the same DataFiles (partition, records, bytes, stats). The Spark-job
+    threshold is lowered so a few dozen files reach it; the input is a
+    LocalRelation, so both writes lay out identical files."""
     import concurrent.futures
     import json
 
@@ -88,10 +88,9 @@ def test_footer_harvest_tiers_agree(spark, tmp_table_dir, monkeypatch):
     orig_parallelize = SC.parallelize
     monkeypatch.setattr(SC, "parallelize",
                         lambda self, *a, **k: jobs.append(1) or orig_parallelize(self, *a, **k))
-    tiers = {"serial": (10**9, 10**9, 0, 0), "threaded": (1, 10**9, 1, 0), "spark-job": (1, 1, 0, 1)}
+    tiers = {"threaded": (10**9, 1, 0), "spark-job": (1, 0, 1)}
     harvested = {}
-    for name, (threaded_min, distributed_min, n_pools, n_jobs) in tiers.items():
-        monkeypatch.setattr(LakeTable, "HARVEST_THREADED_MIN", threaded_min)
+    for name, (distributed_min, n_pools, n_jobs) in tiers.items():
         monkeypatch.setattr(LakeTable, "HARVEST_DISTRIBUTED_MIN", distributed_min)
         pools.clear()
         jobs.clear()
@@ -101,9 +100,8 @@ def test_footer_harvest_tiers_agree(spark, tmp_table_dir, monkeypatch):
             (partition_key(f.partition), f.records, f.bytes, json.dumps(f.stats, sort_keys=True))
             for f in files
         )
-    assert len(harvested["serial"]) > 4
-    assert harvested["threaded"] == harvested["serial"]
-    assert harvested["spark-job"] == harvested["serial"]
+    assert len(harvested["threaded"]) > 4
+    assert harvested["spark-job"] == harvested["threaded"]
 
 
 def test_concurrent_appends_both_commit(spark, tmp_table_dir):

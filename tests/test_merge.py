@@ -1,4 +1,4 @@
-"""MERGE INTO semantics: update / insert / delete arms, pruning, salting.
+"""MERGE INTO semantics: update / insert / delete arms, pruning, layout.
 
 Expected results are computed independently with plain DataFrame set algebra
 (anti-join + union), the same oracle construction the reference's
@@ -76,15 +76,6 @@ def test_merge_prunes_untouched_files(spark, tmp_table_dir):
     untouched_elsewhere = before - wiki_files
     assert untouched_elsewhere <= after  # only wikipedia files were replaced
     assert stats.files_rewritten <= len(wiki_files)
-
-
-def test_merge_salted_path_matches_unsalted(spark, tmp_table_dir, tmp_path):
-    t1 = make_sequences_table(spark, str(tmp_path / "a"), n_rows=1200, small_files=8)
-    t2 = make_sequences_table(spark, str(tmp_path / "b"), n_rows=1200, small_files=8)
-    updates = sequence_updates(spark, 1200, 300, max_tok_cap=256)
-    merge_into(spark, t1, updates, salt_buckets=0)
-    merge_into(spark, t2, updates, salt_buckets=8)
-    assert table_digest(t1.read(spark)) == table_digest(t2.read(spark))
 
 
 def test_merge_insert_only_into_empty_partition_space(spark, tmp_table_dir):

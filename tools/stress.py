@@ -3,7 +3,10 @@ story at 100k+ rows in one process — fragmented ingest, golden digest,
 kill mid-maintenance, lineage-validated resume, snapshot-isolation read,
 MERGE, expiry + GC. Prints one JSON line; exits nonzero on any gate failure.
 
-Usage: [SPARK_GRAFT_STRESS_ROWS=100000] python tools/stress.py
+Usage: [SPARK_GRAFT_STRESS_ROWS=100000] [SPARK_GRAFT_STRESS_DIR=<work dir>]
+       python tools/stress.py
+The work directory defaults to a fresh temporary directory; it is removed
+at the end of the run.
 """
 
 from __future__ import annotations
@@ -13,12 +16,12 @@ import math
 import os
 import shutil
 import sys
+import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 ROWS = int(os.environ.get("SPARK_GRAFT_STRESS_ROWS", "100000"))
-ROOT = os.environ.get("SPARK_GRAFT_STRESS_DIR", "/dev/shm/octocode_stress")
 
 
 def main() -> None:
@@ -30,15 +33,16 @@ def main() -> None:
     from octocode_spark.lakehouse.merge import merge_into
     from octocode_spark.lakehouse.table import partition_key
 
-    spark = get_spark(app="stress", driver_memory="16g")
+    work = os.environ.get("SPARK_GRAFT_STRESS_DIR") or tempfile.mkdtemp(prefix="octocode_stress_")
+    spark = get_spark(app="stress")
     spark.sparkContext.setLogLevel("ERROR")
-    shutil.rmtree(ROOT, ignore_errors=True)
+    shutil.rmtree(work, ignore_errors=True)
     gates: dict[str, bool] = {}
     t_start = time.monotonic()
 
     df = sequences(spark, ROWS, max_tok_cap=2048)
     t = LakeTable.create(
-        f"{ROOT}/seq", df.schema, partition_by=["source"], stat_cols=["n_tok", "doc_id"]
+        f"{work}/seq", df.schema, partition_by=["source"], stat_cols=["n_tok", "doc_id"]
     )
     t.append(df.repartition(256))
     golden = table_digest(t.read(spark))
@@ -47,7 +51,7 @@ def main() -> None:
     n_files0 = len(t.files())
 
     # kill after half the partitions, then resume
-    ledger = Ledger(f"{ROOT}/ledger")
+    ledger = Ledger(f"{work}/ledger")
     plan = plan_compaction(t)
     k = len(plan.partitions) // 2
     try:
@@ -69,7 +73,7 @@ def main() -> None:
 
     updates = sequence_updates(spark, ROWS, ROWS // 10, max_tok_cap=2048)
     pre_merge = {f.path for f in t.files()}
-    merge_into(spark, t, updates, ledger=ledger, salt_buckets=8)
+    merge_into(spark, t, updates, ledger=ledger)
     # every partition the MERGE wrote gained exactly its target file count,
     # ceil(bytes written / TARGET_FILE_SIZE): no sliver beside a survivor file
     gained: dict[str, list] = {}
@@ -103,7 +107,7 @@ def main() -> None:
     from octocode_spark.lakehouse.replicate import replicate_coalesced
 
     cursor = t.meta.current_snapshot_id
-    replica = t.export_snapshot(f"{ROOT}/replica")
+    replica = t.export_snapshot(f"{work}/replica")
     fresh = sequences(spark, ROWS // 10, max_tok_cap=2048).withColumn(
         "doc_id", F.concat(F.lit("r5-"), F.col("doc_id"))
     )
@@ -114,7 +118,9 @@ def main() -> None:
         and len(t.delete_files()) >= 1
     )
     v_before = replica.meta.version
+    t_rep = time.monotonic()
     replicate_coalesced(spark, t, replica, cursor, key="doc_id")
+    replicate_s = round(time.monotonic() - t_rep, 1)
     gates["replication_one_commit"] = replica.meta.version == v_before + 1
     gates["replication_digest_equal"] = (
         table_digest(replica.read(spark)) == table_digest(t.read(spark))
@@ -125,12 +131,13 @@ def main() -> None:
         "files_before": n_files0,
         "files_after": len(t.files()),
         "seconds": round(time.monotonic() - t_start, 1),
+        "replicate_s": replicate_s,
         "gates": gates,
         "all_pass": all(gates.values()),
     }
     print(json.dumps(out))
     spark.stop()
-    shutil.rmtree(ROOT, ignore_errors=True)
+    shutil.rmtree(work, ignore_errors=True)
     sys.exit(0 if out["all_pass"] else 1)
 
 
