@@ -32,7 +32,6 @@ picks between the two by the share of table bytes the plan covers.
 from __future__ import annotations
 
 import math
-import os
 import time
 from dataclasses import dataclass, field
 
@@ -371,16 +370,13 @@ def prune_dangling_delete_sidecars(table: LakeTable):
     baked into the rewrite (read_files applies them) and the sidecar entries
     dangle. A sidecar is removable only when EVERY referenced file is gone;
     partially-dangling sidecars stay (their live entries still apply, dead
-    entries match nothing). Driver-side pyarrow reads — sidecars are small
-    by the MoR tier's contract. Returns the commit Snapshot or None."""
+    entries match nothing). Metadata only: each sidecar's manifest ``refs``
+    name its files. Returns the commit Snapshot or None."""
     sidecars = table.delete_files()
     if not sidecars:
         return None
-    live = {os.path.basename(f.path) for f in table.files()}
-    dead = [
-        f for f in sidecars
-        if not (table._sidecar_file_names([f]) & live)
-    ]
+    live = {f.path for f in table.files()}
+    dead = [f for f in sidecars if live.isdisjoint(f.refs)]
     if not dead:
         return None
     return table.replace_files(

@@ -113,7 +113,7 @@ def change_rows(
     rows_hit = 0
     if mode == "mor":
         if tagged is not None:
-            sidecars = table._write_delete_sidecar(hits(tagged))
+            sidecars = table._write_delete_sidecar(hits(tagged), candidates)
         rows_hit = sum(f.records for f in sidecars)
     elif tagged is not None:
         # the partition key of the rows (the key the router slots them by),
@@ -159,7 +159,7 @@ def change_rows(
         snap = table._commit(
             operation, added=sidecars + added, replaced=[],
             summary={**info, "mor-delete-entries": rows_hit}, branch=branch,
-            require_live=[f.path for f in table._sidecar_targets(sidecars, candidates)],
+            require_live=[p for f in sidecars for p in f.refs],
         )
     else:
         snap = table.replace_files(

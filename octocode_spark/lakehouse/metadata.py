@@ -19,7 +19,7 @@ import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
 
 
 def _new_id() -> int:
@@ -39,6 +39,9 @@ class DataFile:
     # sidecars for the merge-on-read tier). Omitted from JSON for data files
     # so pre-MoR manifests stay byte-identical.
     content: str = "data"
+    # deletes only: the paths of the data files the sidecar's entries
+    # reference, recorded when it is written (Iceberg referenced_data_file)
+    refs: list[str] = field(default_factory=list)
 
     def to_json(self) -> dict:
         out = {
@@ -50,13 +53,17 @@ class DataFile:
         }
         if self.content != "data":
             out["content"] = self.content
+            out["refs"] = self.refs
         return out
 
     @staticmethod
     def from_json(d: dict) -> "DataFile":
+        content = d.get("content", "data")
+        if content == "deletes" and "refs" not in d:
+            raise ValueError(f"delete sidecar {d['path']} has no refs (format version < 2)")
         return DataFile(
             d["path"], d["partition"], d["records"], d["bytes"], d.get("stats", {}),
-            d.get("content", "data"),
+            content, d.get("refs", []),
         )
 
 

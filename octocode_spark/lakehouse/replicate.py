@@ -57,14 +57,8 @@ def replicate_changelog(
     ``to_snapshot_id``, default current) to dst, one destination commit per
     source commit. Returns the new cursor (the last applied source snapshot
     id, or ``from_snapshot_id`` when nothing changed)."""
-    src.refresh()
-    snaps = list(reversed(src._main_ancestry()))
-    idx = {s.snapshot_id: i for i, s in enumerate(snaps)}
-    if from_snapshot_id not in idx:
-        raise KeyError(f"unknown source snapshot {from_snapshot_id}")
-    hi = idx[to_snapshot_id] if to_snapshot_id is not None else len(snaps) - 1
     cursor = from_snapshot_id
-    for s in snaps[idx[from_snapshot_id] + 1 : hi + 1]:
+    for s in src.refresh()._main_window(from_snapshot_id, to_snapshot_id):
         delta = src.changelog_read(spark, from_snapshot_id=cursor, to_snapshot_id=s.snapshot_id)
         # deletes FIRST: within one source commit the delete rows are the
         # PRE-existing copies (a same-commit insert+delete pair cannot occur;
@@ -98,14 +92,10 @@ def replicate_coalesced(
 ) -> int:
     """Fold the whole (from, to] window into ONE destination commit (see
     module doc). Returns the new cursor."""
-    src.refresh()
-    snaps = list(reversed(src._main_ancestry()))
-    idx = {s.snapshot_id: i for i, s in enumerate(snaps)}
-    if from_snapshot_id not in idx:
-        raise KeyError(f"unknown source snapshot {from_snapshot_id}")
-    head = to_snapshot_id if to_snapshot_id is not None else snaps[-1].snapshot_id
-    if head == from_snapshot_id:
+    window = src.refresh()._main_window(from_snapshot_id, to_snapshot_id)
+    if not window:
         return from_snapshot_id
+    head = window[-1].snapshot_id
     delta = src.changelog_read(spark, from_snapshot_id=from_snapshot_id, to_snapshot_id=head)
     # materialize the (small, one-column) changed-key frame ONCE: it feeds
     # BOTH the destination-hits semi-join and the head-state inserts

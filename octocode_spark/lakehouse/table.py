@@ -169,7 +169,8 @@ class LakeTable:
         ``delete_files=None`` uses the current snapshot's sidecars (so every
         consumer — queries, MERGE sources, compaction rewrites — sees
         post-delete data and rewrites bake deletes in); pass ``[]`` to read
-        raw. With no sidecars the plan is the plain scan, unchanged.
+        raw. Only ``_sidecars_for(files)`` apply; with none the plan is the
+        plain scan.
 
         Sidecars key on the data file's BASENAME (uuid-unique within the
         table) + row index, sidestepping path-scheme normalization. The
@@ -179,7 +180,7 @@ class LakeTable:
         and compaction folds sidecars away (maintenance.full_maintenance)."""
         if not files:
             return spark.createDataFrame([], self.schema)
-        dels = self.delete_files() if delete_files is None else delete_files
+        dels = self._sidecars_for(files, delete_files)
         if not dels:
             return spark.read.schema(self.schema).parquet(
                 *[os.path.join(self.root, f.path) for f in files]
@@ -236,12 +237,7 @@ class LakeTable:
         row-level delta is not recoverable from metadata (merge, overwrite,
         copy-on-write delete) RAISE instead of emitting a wrong changelog —
         the same refusal Iceberg's changelog scan makes for overwrites."""
-        snaps = list(reversed(self._main_ancestry()))  # oldest → newest
-        idx = {s.snapshot_id: i for i, s in enumerate(snaps)}
-        if from_snapshot_id not in idx:
-            raise KeyError(f"unknown snapshot {from_snapshot_id}")
-        hi = idx[to_snapshot_id] if to_snapshot_id is not None else len(snaps) - 1
-        window = snaps[idx[from_snapshot_id] + 1 : hi + 1]
+        window = self._main_window(from_snapshot_id, to_snapshot_id)
         from pyspark.sql import functions as F
 
         meta_schema = T.StructType(
@@ -252,7 +248,7 @@ class LakeTable:
             ]
         )
         out = spark.createDataFrame([], meta_schema)
-        prev = snaps[idx[from_snapshot_id]]
+        prev = self.meta.snapshot(from_snapshot_id)
         for s in window:
             if s.operation in self._CHANGELOG_NOOP_OPS:
                 if not ignore_rewrites:
@@ -281,7 +277,8 @@ class LakeTable:
                 if added_dels:
                     # the deleted ROWS: entries of the new sidecars joined
                     # back to their referenced (still-live-at-prev) files
-                    ref_files = self._sidecar_targets(added_dels, self.files(prev.snapshot_id))
+                    refs = {p for d in added_dels for p in d.refs}
+                    ref_files = [f for f in self.files(prev.snapshot_id) if f.path in refs]
                     ddf = self._sidecar_frame(spark, added_dels)
                     dels = (
                         self._tagged_live_scan(spark, ref_files, delete_files=[])
@@ -530,6 +527,17 @@ class LakeTable:
             chain.append(s)
             cur = s.parent_id
         return chain
+
+    def _main_window(self, from_snapshot_id: int, to_snapshot_id: int | None = None) -> list[Snapshot]:
+        """Main-ancestry snapshots after ``from_snapshot_id`` up to
+        ``to_snapshot_id`` (default: the head), oldest first. KeyError when
+        either is not on main's ancestry."""
+        snaps = list(reversed(self._main_ancestry()))
+        idx = {s.snapshot_id: i for i, s in enumerate(snaps)}
+        if from_snapshot_id not in idx:
+            raise KeyError(f"unknown snapshot {from_snapshot_id}")
+        hi = idx[to_snapshot_id] if to_snapshot_id is not None else len(snaps) - 1
+        return snaps[idx[from_snapshot_id] + 1 : hi + 1]
 
     def snapshot_as_of(self, timestamp_ms: int) -> int:
         """Latest MAIN-ancestry snapshot committed at or before
@@ -818,16 +826,17 @@ class LakeTable:
 
         ``mode="mor"`` (Iceberg v2 positional deletes, round-3 verdict ask
         #8): instead of rewriting every hit file, commit a tiny sidecar of
-        (file basename, row position) entries; readers anti-join it out at
-        scan time and compaction folds it away. WRITE AMPLIFICATION: CoW
-        rewrites the whole file per hit — deleting 1 row from a 512MB file
-        writes 512MB; MoR writes ~16 bytes per deleted row regardless of
-        file size (the bound tests/test_delete_and_schema.py pins). Use MoR
-        for frequent point/small deletes, CoW for bulk predicate deletes
-        where the read-side anti-join would carry a big broadcast.
-        Concurrency: the MoR commit re-validates that every referenced data
-        file is still live (a racing compaction would otherwise bake the
-        rows back in) and raises CommitConflict to re-plan, the same
+        (file basename, row position) entries whose manifest ``refs`` name
+        its data files; their readers anti-join it out and compaction folds
+        it away. WRITE AMPLIFICATION: CoW rewrites the whole file per hit —
+        deleting 1 row from a 512MB file writes 512MB; MoR writes ~16 bytes
+        per deleted row regardless of file size (the bound
+        tests/test_delete_and_schema.py pins). Use MoR for frequent
+        point/small deletes, CoW for bulk predicate deletes where the
+        read-side anti-join would carry a big broadcast. Concurrency: the
+        MoR commit re-validates that every file in ``refs`` is still live (a
+        racing compaction would otherwise bake the rows back in) and raises
+        CommitConflict to re-plan, the same
         contract as Iceberg's positional-delete validation.
 
         Copy-on-write: rewrite only files containing matching rows; each
@@ -908,10 +917,7 @@ class LakeTable:
         ).snapshot
 
     def _tagged_live_scan(
-        self,
-        spark: SparkSession,
-        files: list[DataFile],
-        delete_files: list[DataFile] | None = None,
+        self, spark: SparkSession, files: list[DataFile], delete_files: list[DataFile]
     ) -> DataFrame:
         """Position-tagged scan of still-LIVE rows: table columns plus
         (_dfile, _dpos) — the data file's basename and parquet row index —
@@ -922,8 +928,8 @@ class LakeTable:
         deleted-row recovery, and ``merge.change_rows`` — the row-level
         change executor behind MERGE, DELETE and coalesced replication,
         whose hit scan it is and whose sidecars ``_write_delete_sidecar``
-        writes — all build on it. ``delete_files=None`` uses the current
-        snapshot's sidecars; ``[]`` tags the raw rows."""
+        writes — all build on it. ``delete_files`` are the sidecars the
+        plan applies (``[]``: raw rows); only ``_sidecars_for(files)`` join."""
         from pyspark.sql import functions as F
 
         paths = [os.path.join(self.root, f.path) for f in files]
@@ -932,7 +938,7 @@ class LakeTable:
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_dfile"),
             F.col("_metadata.row_index").alias("_dpos"),
         )
-        existing = self.delete_files() if delete_files is None else delete_files
+        existing = self._sidecars_for(files, delete_files)
         if existing:
             ddf = self._sidecar_frame(spark, existing)
             tagged = tagged.join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_anti")
@@ -947,56 +953,48 @@ class LakeTable:
             F.col("file_name").alias("_dfile"), F.col("pos").alias("_dpos")
         )
 
-    def _write_delete_sidecar(self, hits: DataFrame) -> list[DataFile]:
+    def _sidecars_for(self, files: list[DataFile], sidecars: list[DataFile] | None = None) -> list[DataFile]:
+        """The sidecars among ``sidecars`` (None: the current snapshot's)
+        whose ``refs`` name one of ``files``: those a scan of them applies."""
+        paths = {f.path for f in files}
+        sidecars = self.delete_files() if sidecars is None else sidecars
+        return [d for d in sidecars if not paths.isdisjoint(d.refs)]
+
+    def _write_delete_sidecar(self, hits: DataFrame, files: list[DataFile]) -> list[DataFile]:
         """Write the (_dfile, _dpos) tags of ``hits`` — rows of a
-        ``_tagged_live_scan`` — as (file_name, pos) delete entries in ONE
-        parquet sidecar under data/_deletes/ and return its manifest entry
-        (content="deletes"). coalesce(1): the MoR tier is for small deletes —
-        a 1M-entry GDPR batch is still a ~16MB single file."""
+        ``_tagged_live_scan`` of ``files`` — as (file_name, pos) delete
+        entries in ONE parquet sidecar under data/_deletes/ and return its
+        manifest entry (content="deletes", ``refs`` = the files it names, read
+        here from the staged sidecar: the only driver-side sidecar read).
+        coalesce(1): the MoR tier is for small deletes — a 1M-entry GDPR
+        batch is still a ~16MB single file."""
+        import pyarrow.parquet as _pq
         from pyspark.sql import functions as F
 
         staging = os.path.join(self.root, "_tmp", uuid.uuid4().hex)
         hits.select(
             F.col("_dfile").alias("file_name"), F.col("_dpos").cast("long").alias("pos")
         ).coalesce(1).write.mode("overwrite").parquet(staging)
+        by_name = {os.path.basename(f.path): f.path for f in files}
         out: list[DataFile] = []
         del_dir = os.path.join("data", "_deletes")
         os.makedirs(os.path.join(self.root, del_dir), exist_ok=True)
         for name in os.listdir(staging):
             if not name.endswith(".parquet"):
                 continue
-            rel = os.path.join(del_dir, f"{uuid.uuid4().hex}.parquet")
-            os.rename(os.path.join(staging, name), os.path.join(self.root, rel))
-            import pyarrow.parquet as _pq
-
-            md = _pq.ParquetFile(os.path.join(self.root, rel)).metadata
-            if md.num_rows == 0:
-                os.unlink(os.path.join(self.root, rel))
+            staged = os.path.join(staging, name)
+            names = _pq.read_table(staged, columns=["file_name"]).column("file_name")
+            if not len(names):
                 continue
+            rel = os.path.join(del_dir, f"{uuid.uuid4().hex}.parquet")
+            os.rename(staged, os.path.join(self.root, rel))
             out.append(DataFile(
-                path=rel, partition={}, records=md.num_rows,
+                path=rel, partition={}, records=len(names),
                 bytes=os.path.getsize(os.path.join(self.root, rel)),
-                content="deletes",
+                content="deletes", refs=sorted(by_name[n] for n in names.unique().to_pylist()),
             ))
         shutil.rmtree(staging, ignore_errors=True)
         return out
-
-    def _sidecar_file_names(self, sidecars: list[DataFile]) -> set[str]:
-        """Distinct data-file basenames referenced by delete sidecars
-        (driver-side pyarrow read — sidecars are small by design)."""
-        import pyarrow.parquet as _pq
-
-        names: set[str] = set()
-        for f in sidecars:
-            tbl = _pq.read_table(os.path.join(self.root, f.path), columns=["file_name"])
-            names.update(tbl.column("file_name").to_pylist())
-        return names
-
-    def _sidecar_targets(self, sidecars: list[DataFile], files: list[DataFile]) -> list[DataFile]:
-        """The data files among ``files`` that ``sidecars`` reference — a
-        sidecar commit's ``require_live`` set."""
-        names = self._sidecar_file_names(sidecars)
-        return [f for f in files if os.path.basename(f.path) in names]
 
     # ------------------------------------------------------------------ commit
     def _cas(
@@ -1091,23 +1089,16 @@ class LakeTable:
                         f"{sorted(missing)[:3]}"
                     )
                 if known_sidecars is not None:
-                    # validateNoNewDeleteFiles analog: normally zero new
-                    # sidecars, so this costs nothing on the happy path
-                    fresh = [
-                        f for f in parent_sidecars
-                        if f.path not in known_sidecars and f.path not in replaced_set
-                    ]
-                    if fresh:
-                        replaced_basenames = {os.path.basename(p) for p in replaced_set}
-                        for f in fresh:
-                            clash = self._sidecar_file_names([f]) & replaced_basenames
-                            if clash:
-                                raise CommitConflict(
-                                    f"{operation}: delete sidecar {f.path} committed since "
-                                    f"planning references replaced file(s) {sorted(clash)[:3]} "
-                                    "— its deletes are not baked into this rewrite; re-plan "
-                                    "against fresh metadata"
-                                )
+                    # validateNoNewDeleteFiles analog, on the manifest refs
+                    for f in parent_sidecars:
+                        clash = replaced_set.intersection(f.refs)
+                        if clash and f.path not in known_sidecars and f.path not in replaced_set:
+                            raise CommitConflict(
+                                f"{operation}: delete sidecar {f.path} committed since "
+                                f"planning references replaced file(s) {sorted(clash)[:3]} "
+                                "— its deletes are not baked into this rewrite; re-plan "
+                                "against fresh metadata"
+                            )
             else:
                 new_manifests = list(parent_manifests)
             if require_live:

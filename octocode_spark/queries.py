@@ -713,14 +713,16 @@ def q21(spark: SparkSession, sf: str) -> DataFrame:
     so rangeBetween(1, 3.6e9 micros) is EXACTLY `> ts AND <= ts + 1h`.
     Measured 7.4s → 3.7s cold at sf1.0.
 
-    Equivalence assumes non-null (user_id, ts) — verified true of every SF
-    of this deterministic corpus family (a NULL user would partition with
-    other NULLs here but never equi-join there)."""
+    NULL keys: the window puts all NULL users in one partition and a
+    user's NULL timestamps in one frame, but the join matches neither, so
+    a purchase with a NULL user_id or ts follows nothing (n_follow = 0).
+    A non-NULL purchase's frame already excludes NULL-ts events."""
     ev = _t(spark, sf, "events")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = Window.partitionBy("user_id").orderBy(us).rangeBetween(1, 3_600_000_000)
+    keyed = F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     return (
-        ev.withColumn("n_follow", F.count(F.lit(1)).over(w))
+        ev.withColumn("n_follow", F.when(keyed, F.count(F.lit(1)).over(w)).otherwise(0))
         .filter(F.col("event_type") == "purchase")
         .select(F.col("event_id").alias("purchase_id"), F.col("n_follow").cast("long").alias("n_follow"))
         .orderBy("purchase_id")

@@ -187,8 +187,8 @@ def test_partially_dangling_sidecar_survives_prune(spark, tmp_table_dir):
     # one MoR delete whose predicate spans many files -> one sidecar, many refs
     snap = t.delete_where(spark, F.col("n_tok") % 10 == 4, mode="mor")
     assert snap is not None and len(t.delete_files()) == 1
-    touched = t._sidecar_file_names(t.delete_files())
-    assert len(touched) > 1
+    refs = t.delete_files()[0].refs
+    assert len(refs) > 1
     expect = t.read(spark).count()
 
     # rewrite exactly ONE of the referenced files (CoW delete of one row in
@@ -203,7 +203,9 @@ def test_partially_dangling_sidecar_survives_prune(spark, tmp_table_dir):
         pq.read_table(os.path.join(t.root, t.delete_files()[0].path), columns=["file_name"])
         .column("file_name").to_pylist()
     )
-    referenced = [f for f in t.files() if os.path.basename(f.path) in touched]
+    # the manifest refs name exactly the files the sidecar's entries name
+    referenced = [f for f in t.files() if f.path in refs]
+    assert sorted(os.path.basename(f.path) for f in referenced) == sorted(dead)
     one = min(referenced, key=lambda f: (dead[os.path.basename(f.path)] - f.records,
                                          f.stats["doc_id"][0]))
     # pick a row in that file NOT already MoR-deleted
@@ -216,6 +218,56 @@ def test_partially_dangling_sidecar_survives_prune(spark, tmp_table_dir):
     assert len(t.delete_files()) == 1
     assert t.read(spark).count() == expect
     assert t.read(spark).filter(F.col("n_tok") % 10 == 4).count() == 0
+
+
+def test_sidecar_consumers_never_open_sidecar_parquet(spark, tmp_table_dir, monkeypatch):
+    """A delete sidecar's manifest entry names the data files its entries
+    reference (``refs``), recorded when it is written. After that no
+    consumer opens sidecar parquet on the driver: pruning, a rewrite's
+    new-sidecar conflict check, a changelog across the delete and a second
+    MoR delete all run from metadata."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from octocode_spark.lakehouse.maintenance import prune_dangling_delete_sidecars
+    from octocode_spark.lakehouse.table import CommitConflict
+
+    t = make_sequences_table(spark, tmp_table_dir, n_rows=800, small_files=4)
+    base = t.meta.current_snapshot_id
+    files = t.files(partition_filter={"source": "github"})
+    known = {f.path for f in t.delete_files()}  # a rewrite planned before the delete
+    added = t._write_datafiles(t.read_files(spark, files))
+    victim = t.read_files(spark, files).select("doc_id").orderBy("doc_id").first()["doc_id"]
+    t.delete_where(spark, F.col("doc_id") == victim, mode="mor")
+
+    sidecar_dir = os.path.join("data", "_deletes") + os.sep
+
+    def check(source):
+        if sidecar_dir in str(source):
+            raise AssertionError(f"driver-side open of sidecar parquet {source}")
+
+    read_table = pq.read_table
+
+    class GuardedParquetFile(pq.ParquetFile):
+        def __init__(self, source, *a, **k):
+            check(source)
+            super().__init__(source, *a, **k)
+
+    monkeypatch.setattr(pq, "read_table", lambda source, *a, **k: check(source) or read_table(source, *a, **k))
+    monkeypatch.setattr(pq, "ParquetFile", GuardedParquetFile)
+
+    assert prune_dangling_delete_sidecars(t) is None  # its data file is live
+    with pytest.raises(CommitConflict, match="sidecar"):
+        t.replace_files([f.path for f in files], added, operation="compact", known_sidecars=known)
+    changes = t.changelog_read(spark, base).collect()
+    assert [(r["doc_id"], r["_change_type"]) for r in changes] == [(victim, "delete")]
+    second = t.read(spark).select("doc_id").orderBy("doc_id").first()["doc_id"]
+    assert t.delete_where(spark, F.col("doc_id") == second, mode="mor") is not None
+    assert t.read(spark).filter(F.col("doc_id").isin([victim, second])).count() == 0
+    first_sidecar, second_sidecar = t.delete_files()
+    assert len(first_sidecar.refs) == 1 and first_sidecar.refs[0] in {f.path for f in files}
+    assert len(second_sidecar.refs) == 1
 
 
 def test_merge_into_table_with_pending_mor_deletes(spark, tmp_table_dir):

@@ -104,6 +104,23 @@ def test_footer_harvest_tiers_agree(spark, tmp_table_dir, monkeypatch):
     assert harvested["spark-job"] == harvested["threaded"]
 
 
+def test_manifest_entry_refs_only_on_delete_sidecars():
+    """A delete sidecar's manifest entry carries ``refs`` and must: one
+    without them fails to load, naming the file. Data-file entries
+    serialize exactly as before ``refs`` existed."""
+    from octocode_spark.lakehouse.metadata import DataFile
+
+    data = DataFile("data/a.parquet", {"source": "web"}, 3, 100, {"n_tok": [1, 9]})
+    assert data.to_json() == {"path": "data/a.parquet", "partition": {"source": "web"},
+                              "records": 3, "bytes": 100, "stats": {"n_tok": [1, 9]}}
+    sidecar = DataFile("data/_deletes/d.parquet", {}, 2, 10, content="deletes",
+                       refs=["data/a.parquet"])
+    assert DataFile.from_json(sidecar.to_json()) == sidecar
+    legacy = {k: v for k, v in sidecar.to_json().items() if k != "refs"}
+    with pytest.raises(ValueError, match="data/_deletes/d.parquet"):
+        DataFile.from_json(legacy)
+
+
 def test_concurrent_appends_both_commit(spark, tmp_table_dir):
     df = sequences(spark, 400, max_tok_cap=64)
     t = LakeTable.create(tmp_table_dir, df.schema, partition_by=["source"], stat_cols=[])

@@ -833,3 +833,37 @@ def test_spread_for_compute_fans_out_starved_scan_noop_at_scale(spark):
     # same object, so no exchange is ever added above a big scan
     wide = docs.repartition(target + 4, "doc_id")
     assert spread_for_compute(wide) is wide
+
+
+def test_q21_null_user_or_ts_purchases_follow_nothing(spark, tmp_path):
+    """q21 on a crafted events file agrees with its DuckDB oracle when keys
+    are NULL: a purchase with a NULL user_id or a NULL ts equi-joins no
+    event there, so it follows nothing — even though the window puts NULL
+    users (and NULL timestamps of one user) in one frame."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from octocode_spark.queries import oracle_sql, queries
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0)
+    minutes = dt.timedelta(minutes=1)
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2, 3, 4, 5, 6], pa.int64()),
+        "ts": pa.array([t0, t0 + 10 * minutes, t0, t0 + 30 * minutes, None, None],
+                       pa.timestamp("us")),
+        "user_id": pa.array([None, None, 7, 7, 7, 7], pa.int64()),
+        "event_type": ["purchase", "click", "purchase", "click", "purchase", "click"],
+        "value": pa.array([1.0] * 6),
+        "props": ["{}"] * 6,
+    }), str(tmp_path / "events.parquet"))
+
+    name = "q21_events_within_hour_after_purchase"
+    got = [tuple(r) for r in queries()[name](spark, str(tmp_path)).collect()]
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path / 'events.parquet'}')")
+    want = con.sql(oracle_sql()[name]).fetchall()
+    assert want == [(1, 0), (3, 1), (5, 0)]
+    assert got == want

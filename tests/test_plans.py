@@ -179,3 +179,33 @@ def test_read_files_applies_sidecars_as_one_broadcast_anti_join(spark, tmp_table
     joins = _executed_joins(t.read(spark))
     assert len(joins) == 1, joins
     assert "BroadcastHashJoin" in joins[0] and "LeftAnti" in joins[0], joins
+
+
+def test_read_applies_only_sidecars_that_reference_its_files(spark, tmp_table_dir):
+    """A delete sidecar joins into a scan only when its manifest ``refs``
+    name a scanned file: after a MoR delete inside source=github, a read of
+    another partition is the plain scan, with no LeftAnti join."""
+    from pyspark.sql import functions as F
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    t = make_sequences_table(spark, tmp_table_dir, n_rows=400, small_files=4)
+    rows = {r["source"]: r["count"] for r in t.read(spark).groupBy("source").count().collect()}
+    other = sorted(k for k in rows if k != "github")[0]
+    victims = [
+        r["doc_id"]
+        for r in t.read(spark, partition_filter={"source": "github"})
+        .select("doc_id").orderBy("doc_id").limit(2).collect()
+    ]
+    t.delete_where(spark, F.col("doc_id").isin(victims), mode="mor")
+    rows["github"] -= 2
+
+    df = t.read(spark, partition_filter={"source": other})
+    assert "LeftAnti" not in optimized(df)
+    assert df.count() == rows[other]
+    gh = t.read(spark, partition_filter={"source": "github"})
+    assert "LeftAnti" in optimized(gh)
+    assert gh.count() == rows["github"]
+    assert t.read(spark).count() == sum(rows.values())
+    assert all(p.startswith("data/source=github/") for d in t.delete_files() for p in d.refs)

@@ -13,11 +13,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem",
@@ -63,12 +65,9 @@ def main():
     # octocode_spark.queries directly: its wrapper ships the package zip to
     # executor workers (addPyFile), so UDF-bearing queries work from any cwd
     import importlib.util
-    import os
 
-    entry_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py"
-    )
-    spec = importlib.util.spec_from_file_location("__spark_entry__", entry_path)
+    spec = importlib.util.spec_from_file_location(
+        "__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
     entry_mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry_mod)
     queries, oracle_sql = entry_mod.queries, entry_mod.oracle_sql

@@ -7,9 +7,10 @@ Usage: python tools/dump_plans.py > PLANS.md
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SHOW = {
     "q01_pricing_summary": "predicate pushdown (PushedFilters: l_shipdate) + partial aggregation",
