@@ -3,46 +3,43 @@ log and apply its row-level deltas to a destination table — the reference's
 watcher → incremental-reindex loop (src/mcp/watcher.rs:33-142, the git-diff
 incremental source S3) composed with the CDC scan.
 
-Two application modes:
+Both modes apply a window of source commits the same way, through
+``replicate_coalesced``: the keys the window's changelog names are
+semi-join-deleted from the destination (merge-on-read: a delete sidecar, no
+data file rewritten) and the source's window-end live rows of those keys are
+re-inserted, routed to their partitions' target file counts. It is a
+merge-on-read ``merge.change_rows``, the executor MERGE and DELETE commit
+through: the sidecar and the inserts land in ONE atomic snapshot, which
+conflicts if a racing compaction replaced a file the sidecar references.
+Net effect per key, not per event: a key inserted then deleted inside the
+window nets to absent, and duplicate-key sources replicate every surviving
+copy.
 
-``replicate_changelog`` — each source commit's delta applies as its OWN
-destination commit, in ancestry order: a key deleted and re-appended across
-two source commits lands delete-then-insert, and a row inserted then deleted
-nets to absent, exactly mirroring source state commit-for-commit. Deletes
-apply as merge-on-read positional deletes keyed on ``key`` via a CLUSTER-SIDE
-semi-join (``delete_where_keys`` — the delete keys never touch the driver and
-never appear as plan literals); inserts append.
+``replicate_changelog`` — one destination commit per source commit, in
+ancestry order (a one-commit window each), mirroring source state
+commit-for-commit.
 
 ``replicate_coalesced`` — the reference watcher's DEBOUNCE semantics
 (watcher.rs:33-62: N filesystem events coalesce into one reindex): the whole
-window of source commits folds into ONE destination commit. Net effect per
-key, not per event — changed keys' old copies are semi-join-deleted and their
-window-end live rows re-inserted from the source head, so a key inserted then
-deleted inside the window nets to absent and a chatty 100-commit source costs
-one metadata commit instead of a commit storm. It is a merge-on-read
-``merge.change_rows``, the executor MERGE and DELETE commit through: the
-delete sidecar and the inserts (routed to their partitions' target file
-counts) land in the SAME atomic snapshot, which conflicts if a racing
-compaction replaced a file the sidecar references. Unlike the per-commit
-mode, replaying a coalesced window is IDEMPOTENT (re-deleting the changed
-keys and re-inserting the same head-state rows is a fixpoint), so it is also
-the crash-recovery path.
+window folds into ONE destination commit, so a chatty 100-commit source
+costs one metadata commit instead of a commit storm.
+
+Both modes are IDEMPOTENT: re-deleting the changed keys and re-inserting the
+same source rows is a fixpoint, so replaying any prefix of an applied window
+leaves the destination unchanged.
 
 Cursor discipline: the caller persists the returned snapshot id (e.g. in a
 Ledger row) AFTER the destination commits land and passes it back next round
-(C3 write ordering: data commit first, cursor after). Per-commit replay is
-idempotent for deletes but NOT for inserts (append has no key guard) — on a
-crash between commit and cursor write, re-sync with ``replicate_coalesced``
-(or MERGE) instead.
+(C3 write ordering: data commit first, cursor after). A cursor write lost in
+a crash only replays.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
-from octocode_spark.lakehouse.merge import change_rows
-from octocode_spark.lakehouse.table import LakeTable, partition_key_col
+from octocode_spark.lakehouse.merge import BROADCAST_KEY_LIMIT, _may_hold, _sorted_keys, change_rows
+from octocode_spark.lakehouse.table import LakeTable
 
 
 def replicate_changelog(
@@ -59,26 +56,7 @@ def replicate_changelog(
     id, or ``from_snapshot_id`` when nothing changed)."""
     cursor = from_snapshot_id
     for s in src.refresh()._main_window(from_snapshot_id, to_snapshot_id):
-        delta = src.changelog_read(spark, from_snapshot_id=cursor, to_snapshot_id=s.snapshot_id)
-        # deletes FIRST: within one source commit the delete rows are the
-        # PRE-existing copies (a same-commit insert+delete pair cannot occur;
-        # appends and MoR deletes are distinct operations), so removing by
-        # key before appending reproduces the source's final state. The keys
-        # stay a DataFrame end to end — semi-joined against the destination
-        # scan, written straight into the sidecar (no driver collect, no
-        # isin literal: a 10M-row source delete is one shuffle here). The
-        # isEmpty probe touches only the single-commit delta, so append-only
-        # commits never pay the full destination scan the keyed delete costs.
-        del_keys = delta.filter(F.col("_change_type") == "delete").select(key)
-        if not del_keys.isEmpty():
-            dst.delete_where_keys(spark, del_keys, mode="mor")
-        ins = (
-            delta.filter(F.col("_change_type") == "insert")
-            .drop("_change_type", "_snapshot_id")
-        )
-        if not ins.isEmpty():
-            dst.append(ins)
-        cursor = s.snapshot_id
+        cursor = replicate_coalesced(spark, src, dst, cursor, key, to_snapshot_id=s.snapshot_id)
     return cursor
 
 
@@ -103,22 +81,36 @@ def replicate_coalesced(
     # multi-snapshot changelog scan (the same read-amplification class the
     # dedup Jaccard paths had)
     changed = delta.select(key).dropDuplicates([key]).localCheckpoint(eager=True)
+    n_changed = changed.count()
+    if not n_changed:
+        return head
     # net inserts = the source's WINDOW-END live rows of every changed key —
-    # no event-order reasoning needed, and duplicate-key sources replicate
-    # all surviving copies; one grouped count sizes their layout
+    # no event-order reasoning needed. Their layout is sized from metadata
+    # (counting them would run the source scan a second time): each
+    # partition gets at most its rows and about one row per changed key, and
+    # every partition is planned, because a changed key may keep a copy in a
+    # partition the window never touched
     inserts = (
         src.read(spark, snapshot_id=head).join(changed, key, "left_semi")
         .select(*dst.schema.names)
     )
-    counts = inserts.groupBy(partition_key_col(dst.meta.partition_by).alias("_pkey")).count()
     files = dst.files()
+    # metadata prune, as MERGE does: only destination files whose key
+    # min/max can hold a changed key are scanned for hits
+    candidates = files
+    if n_changed <= BROADCAST_KEY_LIMIT and all(key in f.stats for f in files):
+        keys = _sorted_keys(changed, key)
+        if keys is not None:
+            candidates = [f for f in files if _may_hold(keys, *f.stats[key])]
     change_rows(
-        spark, dst, files, dst.delete_files(),
+        spark, dst, candidates, dst.delete_files(),
         hits=lambda tagged: tagged.join(changed, key, "left_semi"),
         mode="mor",
         operation="replicate",
         inserts=inserts,
-        insert_rows={r["_pkey"]: r["count"] for r in counts.collect()},
+        insert_rows={
+            k: min(sum(f.records for f in fs), n_changed) for k, fs in src.partitions(head).items()
+        },
         live=files,
         summary={"source-window": f"{from_snapshot_id}..{head}"},
     )

@@ -22,6 +22,7 @@ data movement itself is zero-copy rename).
 from __future__ import annotations
 
 import dataclasses
+import functools
 import json
 import os
 import re
@@ -208,36 +209,27 @@ class LakeTable:
         return self.read_files(spark, self.incremental_files(from_snapshot_id, to_snapshot_id))
 
     # commit operations that move rows between files WITHOUT changing table
-    # contents — a changelog scan emits nothing for them (Iceberg likewise
-    # treats REPLACE operations as logical no-ops in its changelog scan)
-    _CHANGELOG_NOOP_OPS = frozenset(
-        {"compact", "rewrite-manifests", "expire", "prune-deletes", "import"}
-    )
+    # contents — a changelog scan plans them (metadata only) and reads no rows
+    _CHANGELOG_NOOP_OPS = frozenset({"compact", "rewrite-manifests", "prune-deletes"})
 
     def changelog_read(
         self,
         spark: SparkSession,
         from_snapshot_id: int,
         to_snapshot_id: int | None = None,
-        ignore_rewrites: bool = True,
     ) -> DataFrame:
         """CDC source (Iceberg changelog-scan analog): row-level changes
         committed AFTER ``from_snapshot_id`` up to ``to_snapshot_id``
         (default: current), as the table columns plus
         ``_change_type`` ('insert' | 'delete') and ``_snapshot_id``.
 
-        - inserts: rows of data files ADDED by append snapshots;
-        - deletes: rows removed by positional-delete sidecars added by
-          merge-on-read delete snapshots (the deleted rows themselves,
-          recovered by joining the sidecar entries back to their files).
-
-        Rewrite-class snapshots (compaction, manifest rewrite, expiry,
-        sidecar pruning) change layout, not contents — skipped when
-        ``ignore_rewrites`` (default). Content-changing operations whose
-        row-level delta is not recoverable from metadata (merge, overwrite,
-        copy-on-write delete) RAISE instead of emitting a wrong changelog —
-        the same refusal Iceberg's changelog scan makes for overwrites."""
-        window = self._main_window(from_snapshot_id, to_snapshot_id)
+        One rule for every snapshot ``s`` with parent ``p``: its deletes are
+        the rows of the data files ``s`` removed, read with ``p``'s sidecars,
+        plus the rows live at ``p`` that ``s``'s new sidecars name; its
+        inserts are the rows of the data files ``s`` added. Carry-over rows —
+        those a copy-on-write rewrite wrote back unchanged — are removed from
+        both sides as a multiset difference (``exceptAll``). Layout-only
+        snapshots (``_CHANGELOG_NOOP_OPS``) are planned but read nothing."""
         from pyspark.sql import functions as F
 
         meta_schema = T.StructType(
@@ -248,57 +240,47 @@ class LakeTable:
             ]
         )
         out = spark.createDataFrame([], meta_schema)
-        prev = self.meta.snapshot(from_snapshot_id)
-        for s in window:
+        data, dels = self._live_maps(from_snapshot_id)
+        for s in self._main_window(from_snapshot_id, to_snapshot_id):
+            prev_data, prev_dels = data, dels
+            data, dels = self._live_maps(s.snapshot_id)
             if s.operation in self._CHANGELOG_NOOP_OPS:
-                if not ignore_rewrites:
-                    raise ValueError(
-                        f"changelog window crosses rewrite snapshot {s.snapshot_id} "
-                        f"({s.operation}) and ignore_rewrites=False"
-                    )
-                prev = s
                 continue
-            prev_data = {f.path for f in self.files(prev.snapshot_id)}
-            prev_dels = {f.path for f in self.delete_files(prev.snapshot_id)}
-            added_data = [f for f in self.files(s.snapshot_id) if f.path not in prev_data]
-            added_dels = [
-                f for f in self.delete_files(s.snapshot_id) if f.path not in prev_dels
-            ]
-            removed_data = prev_data - {f.path for f in self.files(s.snapshot_id)}
-            if s.operation == "append" and not added_dels and not removed_data:
-                if added_data:
-                    ins = self.read_files(spark, added_data, delete_files=[]).select(
-                        "*",
-                        F.lit("insert").alias("_change_type"),
-                        F.lit(s.snapshot_id).alias("_snapshot_id"),
-                    )
-                    out = out.unionByName(ins)
-            elif s.operation == "delete" and not added_data and not removed_data:
-                if added_dels:
-                    # the deleted ROWS: entries of the new sidecars joined
-                    # back to their referenced (still-live-at-prev) files
-                    refs = {p for d in added_dels for p in d.refs}
-                    ref_files = [f for f in self.files(prev.snapshot_id) if f.path in refs]
-                    ddf = self._sidecar_frame(spark, added_dels)
-                    dels = (
-                        self._tagged_live_scan(spark, ref_files, delete_files=[])
-                        .join(F.broadcast(ddf), ["_dfile", "_dpos"], "left_semi")
-                        .drop("_dfile", "_dpos")
-                        .select(
-                            "*",
-                            F.lit("delete").alias("_change_type"),
-                            F.lit(s.snapshot_id).alias("_snapshot_id"),
-                        )
-                    )
-                    out = out.unionByName(dels)
-            else:
-                raise ValueError(
-                    f"changelog undefined across snapshot {s.snapshot_id} "
-                    f"({s.operation}: rewrites files with content changes — "
-                    "row-level delta not recoverable from metadata)"
+            removed = [f for p, f in prev_data.items() if p not in data]
+            added = [f for p, f in data.items() if p not in prev_data]
+            new_dels = [f for p, f in dels.items() if p not in prev_dels]
+            parts = []
+            if removed:
+                parts.append(self.read_files(spark, removed, delete_files=list(prev_dels.values())))
+            if new_dels:
+                # the rows the new sidecars name, as live at p: a row an
+                # earlier sidecar already deleted is not deleted again
+                named = [prev_data[r] for r in {r for d in new_dels for r in d.refs} if r in prev_data]
+                parts.append(
+                    self._tagged_live_scan(spark, named, delete_files=list(prev_dels.values()))
+                    .join(F.broadcast(self._sidecar_frame(spark, new_dels)), ["_dfile", "_dpos"], "left_semi")
+                    .drop("_dfile", "_dpos")
                 )
-            prev = s
+            deletes = functools.reduce(DataFrame.unionByName, parts) if parts else None
+            inserts = self.read_files(spark, added, delete_files=[]) if added else None
+            if deletes is not None and inserts is not None:
+                deletes, inserts = deletes.exceptAll(inserts), inserts.exceptAll(deletes)
+            for change, rows in (("delete", deletes), ("insert", inserts)):
+                if rows is not None:
+                    out = out.unionByName(rows.select(
+                        "*", F.lit(change).alias("_change_type"), F.lit(s.snapshot_id).alias("_snapshot_id")
+                    ))
         return out
+
+    def _live_maps(self, snapshot_id: int) -> tuple[dict[str, DataFile], dict[str, DataFile]]:
+        """The data files and the delete sidecars live at ``snapshot_id``,
+        keyed by path, from one pass over its manifests."""
+        data: dict[str, DataFile] = {}
+        dels: dict[str, DataFile] = {}
+        for mf in self.manifests(snapshot_id):
+            for f in mf.files:
+                (data if f.content == "data" else dels)[f.path] = f
+        return data, dels
 
     def partitions(self, snapshot_id: int | None = None) -> dict[str, list[DataFile]]:
         """Group live files by partition key string (ledger grain)."""
@@ -966,15 +948,17 @@ class LakeTable:
         entries in ONE parquet sidecar under data/_deletes/ and return its
         manifest entry (content="deletes", ``refs`` = the files it names, read
         here from the staged sidecar: the only driver-side sidecar read).
-        coalesce(1): the MoR tier is for small deletes — a 1M-entry GDPR
-        batch is still a ~16MB single file."""
+        One file: the MoR tier is for small deletes — a 1M-entry GDPR batch
+        is still a ~16MB single file. ``repartition(1)`` shuffles only the
+        hits into it, so the scan and hit filter above keep their
+        parallelism (``coalesce(1)`` would run them all in one task)."""
         import pyarrow.parquet as _pq
         from pyspark.sql import functions as F
 
         staging = os.path.join(self.root, "_tmp", uuid.uuid4().hex)
         hits.select(
             F.col("_dfile").alias("file_name"), F.col("_dpos").cast("long").alias("pos")
-        ).coalesce(1).write.mode("overwrite").parquet(staging)
+        ).repartition(1).write.mode("overwrite").parquet(staging)
         by_name = {os.path.basename(f.path): f.path for f in files}
         out: list[DataFile] = []
         del_dir = os.path.join("data", "_deletes")

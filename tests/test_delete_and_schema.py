@@ -140,6 +140,30 @@ def test_mor_delete_writes_sidecar_not_files(spark, tmp_table_dir):
     assert t.meta.version == v
 
 
+def test_mor_delete_hit_scan_keeps_scan_parallelism(spark, tmp_table_dir):
+    """The sidecar is one file, but only the hits are shuffled into it: the
+    candidate scan and hit filter of a MoR delete run as many tasks as the
+    plain scan of the same files, not one."""
+    t = make_sequences_table(spark, tmp_table_dir, n_rows=2400, small_files=24)
+    sc = spark.sparkContext
+
+    def max_stage_tasks(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        stages = [tracker.getStageInfo(sid) for jid in tracker.getJobIdsForGroup(group)
+                  for sid in tracker.getJobInfo(jid).stageIds]
+        return max(st.numTasks for st in stages if st is not None)
+
+    scan = max_stage_tasks("plain-scan", lambda: t.read(spark).write.format("noop").mode("overwrite").save())
+    hit = max_stage_tasks("mor-delete", lambda: t.delete_where(spark, F.col("n_tok") < 100, mode="mor"))
+    assert scan > 1 and hit >= scan, (scan, hit)
+    assert len(t.delete_files()) == 1
+
+
 def test_mor_deletes_baked_in_by_compaction_then_pruned(spark, tmp_table_dir):
     """Compaction reads through the sidecars (rewrites bake deletes in) and
     maintenance prunes the then-dangling sidecars; CoW deletes over a table
@@ -353,44 +377,88 @@ def test_replicate_changelog_mirrors_source(spark, tmp_table_dir):
 
 
 def test_replicate_changelog_seeded_random_walk(spark, tmp_table_dir):
-    """Breadth: a seeded random schedule of appends and MoR deletes (6
-    commits, one replication over the whole window) still mirrors exactly —
-    the ancestry-ordered per-commit application handles any interleaving."""
+    """Breadth: a seeded random schedule of appends, MoR and CoW deletes,
+    CoW MERGEs and compactions (each drawn at least once, one replication
+    over the whole window) still mirrors exactly — and so does replicating
+    that replica, whose log holds replication commits, into a second one."""
     import random
 
-    from octocode_spark.lakehouse import LakeTable
+    from octocode_spark.lakehouse.maintenance import plan_compaction, rewrite_partitions
+    from octocode_spark.lakehouse.merge import merge_into
     from octocode_spark.lakehouse.replicate import replicate_changelog
 
     rng = random.Random(1234)
     src = make_sequences_table(spark, tmp_table_dir + "/src", n_rows=300, small_files=3)
     cursor = src.meta.current_snapshot_id
-    src.export_snapshot(tmp_table_dir + "/dst")
-    dst = LakeTable.load(tmp_table_dir + "/dst")
+    dst = src.export_snapshot(tmp_table_dir + "/dst")
+    cursor2 = dst.meta.current_snapshot_id
+    dst2 = dst.export_snapshot(tmp_table_dir + "/dst2")
 
+    ops = ["append", "delete_mor", "delete_cow", "merge", "compact"]
     next_id = 1000
-    for _ in range(6):
-        live = [r["doc_id"] for r in src.read(spark).select("doc_id").collect()]
-        if rng.random() < 0.5 and live:
-            victims = rng.sample(live, min(4, len(live)))
-            src.delete_where(spark, F.col("doc_id").isin(victims), mode="mor")
-        else:
-            # genuinely-new ids: prefix a fresh namespace per batch
-            fresh = sequences(spark, 30, max_tok_cap=32).withColumn(
-                "doc_id", F.concat(F.lit(f"new{next_id}-"), F.col("doc_id"))
-            )
-            next_id += 1
+    for op in rng.sample(ops, len(ops)) + [rng.choice(ops) for _ in range(2)]:
+        live = sorted(r["doc_id"] for r in src.read(spark).select("doc_id").collect())
+        # genuinely-new ids: prefix a fresh namespace per batch
+        fresh = sequences(spark, 30, max_tok_cap=32).withColumn(
+            "doc_id", F.concat(F.lit(f"new{next_id}-"), F.col("doc_id"))
+        )
+        next_id += 1
+        if op == "append":
             src.append(fresh)
+        elif op in ("delete_mor", "delete_cow"):
+            victims = rng.sample(live, 4)
+            src.delete_where(spark, F.col("doc_id").isin(victims), mode=op[-3:])
+        elif op == "merge":
+            upd = src.read(spark).filter(F.col("doc_id").isin(rng.sample(live, 3)))
+            merge_into(spark, src, upd.withColumn("n_tok", F.lit(77).cast("int")).unionByName(fresh.limit(5)))
+        else:
+            rewrite_partitions(spark, src, plan_compaction(src, target_file_size=1 << 30, force=True))
 
     cursor = replicate_changelog(spark, src, dst, cursor, key="doc_id")
-    s_rows = sorted(map(tuple, src.read(spark).select("doc_id", "n_tok", "source").collect()))
-    d_rows = sorted(map(tuple, dst.read(spark).select("doc_id", "n_tok", "source").collect()))
-    assert s_rows == d_rows and len(s_rows) > 0
+    assert cursor == src.meta.current_snapshot_id
+    replicate_changelog(spark, dst, dst2, cursor2, key="doc_id")
+    want = table_digest(src.read(spark))
+    assert table_digest(dst.read(spark)) == want
+    assert table_digest(dst2.read(spark)) == want
+
+
+def test_replicate_changelog_replay_is_idempotent(spark, tmp_table_dir):
+    """A cursor write lost after the destination commit replays the window
+    from the stale cursor: the replay leaves dst equal to src instead of
+    appending the window's rows a second time."""
+    from octocode_spark.lakehouse.replicate import replicate_changelog
+
+    src = make_sequences_table(spark, tmp_table_dir + "/src", n_rows=600, small_files=4)
+    cursor = src.meta.current_snapshot_id
+    dst = src.export_snapshot(tmp_table_dir + "/dst")
+    src.append(sequences(spark, 40, max_tok_cap=32).withColumn(
+        "doc_id", F.concat(F.lit("replay-"), F.col("doc_id"))))
+    head = replicate_changelog(spark, src, dst, cursor, key="doc_id")
+    assert replicate_changelog(spark, src, dst, cursor, key="doc_id") == head
+    assert dst.read(spark).count() == src.read(spark).count() == 640
+    assert table_digest(dst.read(spark)) == table_digest(src.read(spark))
+
+
+def test_racing_mor_deletes_of_one_row_log_one_delete(spark, tmp_table_dir):
+    """Two handles planned at one snapshot MoR-delete the same key and both
+    commit, so two sidecars name one row. Each sidecar is read against its
+    parent's sidecars, so the changelog deletes the row once."""
+    t = make_sequences_table(spark, tmp_table_dir, n_rows=300, small_files=3)
+    s0 = t.meta.current_snapshot_id
+    victim = t.read(spark).select("doc_id").orderBy("doc_id").first()["doc_id"]
+    keys = spark.createDataFrame([(victim,)], "doc_id: string")
+    a, b = LakeTable.load(t.root), LakeTable.load(t.root)
+    assert a.delete_where_keys(spark, keys, mode="mor") is not None
+    assert b.delete_where_keys(spark, keys, mode="mor") is not None
+    log = t.refresh().changelog_read(spark, from_snapshot_id=s0).collect()
+    assert [(r["doc_id"], r["_change_type"]) for r in log] == [(victim, "delete")]
 
 
 def test_changelog_read_semantics(spark, tmp_table_dir):
     """CDC scan: inserts from append snapshots, deletes from MoR sidecars
-    (row values recovered), rewrite snapshots skipped as logical no-ops,
-    content-rewriting ops refused."""
+    (row values recovered), a compaction skipped as a logical no-op, and a
+    copy-on-write delete's changelog exactly its deleted rows — the rows its
+    rewrite carried over cancel out of both sides."""
     from octocode_spark.lakehouse.maintenance import plan_compaction, rewrite_partitions
 
     t = make_sequences_table(spark, tmp_table_dir, n_rows=400, small_files=4)
@@ -416,15 +484,19 @@ def test_changelog_read_semantics(spark, tmp_table_dir):
     log2 = t.changelog_read(spark, from_snapshot_id=s0)
     assert log2.filter("_change_type = 'insert'").count() == n_extra
     assert log2.filter("_change_type = 'delete'").count() == len(victims)
-    with pytest.raises(ValueError, match="rewrite snapshot"):
-        t.changelog_read(spark, from_snapshot_id=s0, ignore_rewrites=False)
 
-    # a CoW delete's row-level delta is not metadata-recoverable: refuse
-    t.delete_where(spark, F.col("n_tok") < 5)
-    survivors = t.read(spark)
-    if t.meta.snapshot().operation == "delete" and survivors.count() < 400 + n_extra - len(victims):
-        with pytest.raises(ValueError, match="changelog undefined"):
-            t.changelog_read(spark, from_snapshot_id=s0)
+    # a CoW delete rewrites its hit files, survivors included
+    s1 = t.meta.current_snapshot_id
+    cow_victims = [r["doc_id"] for r in
+                   t.read(spark).select("doc_id").orderBy(F.desc("doc_id")).limit(7).collect()]
+    snap = t.delete_where(spark, F.col("doc_id").isin(cow_victims))
+    assert snap.summary["files-rewritten"] > 0 and snap.summary["added-records"] > 0
+    log3 = t.changelog_read(spark, from_snapshot_id=s1)
+    assert log3.filter("_change_type = 'insert'").count() == 0
+    got = log3.filter("_change_type = 'delete'").drop("_change_type", "_snapshot_id")
+    want = t.read(spark, snapshot_id=s1).filter(F.col("doc_id").isin(cow_victims))
+    assert got.count() == len(cow_victims)
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
 def test_rewrite_manifests_preserves_live_sidecars(spark, tmp_table_dir):

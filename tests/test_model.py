@@ -7,7 +7,9 @@ operations (append / MoR delete / CoW delete / keyed MoR delete / compact /
 manifest rewrite / snapshot expiry) against a plain dict model and checks
 full-content equality after every step — so any pair- or triple-wise
 composition that resurrects, drops, or duplicates rows fails with the
-exact op sequence as the counterexample.
+exact op sequence as the counterexample. After every step that commits on
+main, the step's ``changelog_read`` applied to the previous content (as
+multisets) must give the new content.
 
 Spark actions are slow, so examples are few but each is a full random
 program; the per-op equality check localizes a failure to the op that
@@ -15,6 +17,8 @@ introduced it.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -73,6 +77,7 @@ def test_lake_table_op_algebra_matches_model(spark, tmp_path_factory, ops):
     counter = itertools.count()
 
     for step, (op, arg) in enumerate(ops):
+        prev_head, prev_rows = t.meta.current_snapshot_id, Counter(model.values())
         if op == "append":
             batch = [
                 (f"d{next(counter):05d}", 10 + i, SOURCES[i % len(SOURCES)])
@@ -154,3 +159,12 @@ def test_lake_table_op_algebra_matches_model(spark, tmp_path_factory, ops):
             f"divergence after step {step} ({op},{arg}) of {ops}: "
             f"extra={sorted(got - want)[:5]} missing={sorted(want - got)[:5]}"
         )
+        head = t.meta.current_snapshot_id
+        if op != "export_import" and prev_head is not None and head != prev_head:
+            content = prev_rows
+            for r in t.changelog_read(spark, prev_head, head).collect():
+                row = (r["doc_id"], r["n_tok"], r["source"])
+                content[row] += 1 if r["_change_type"] == "insert" else -1
+            assert {k: v for k, v in content.items() if v} == Counter(want), (
+                f"changelog of step {step} ({op},{arg}) of {ops} does not replay"
+            )

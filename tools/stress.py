@@ -1,7 +1,8 @@
 """F1 sf-correct stress run (FIXTURES.md tier 2): the full correctness
 story at 100k+ rows in one process — fragmented ingest, golden digest,
 kill mid-maintenance, lineage-validated resume, snapshot-isolation read,
-MERGE, expiry + GC. Prints one JSON line; exits nonzero on any gate failure.
+MERGE, expiry + GC, replication (one coalesced window, then per commit
+across a MERGE). Prints one JSON line; exits nonzero on any gate failure.
 
 Usage: [SPARK_GRAFT_STRESS_ROWS=100000] [SPARK_GRAFT_STRESS_DIR=<work dir>]
        python tools/stress.py
@@ -104,7 +105,7 @@ def main() -> None:
     # destination commit and require exact state equality
     from pyspark.sql import functions as F
 
-    from octocode_spark.lakehouse.replicate import replicate_coalesced
+    from octocode_spark.lakehouse.replicate import replicate_changelog, replicate_coalesced
 
     cursor = t.meta.current_snapshot_id
     replica = t.export_snapshot(f"{work}/replica")
@@ -119,10 +120,18 @@ def main() -> None:
     )
     v_before = replica.meta.version
     t_rep = time.monotonic()
-    replicate_coalesced(spark, t, replica, cursor, key="doc_id")
+    cursor = replicate_coalesced(spark, t, replica, cursor, key="doc_id")
     replicate_s = round(time.monotonic() - t_rep, 1)
     gates["replication_one_commit"] = replica.meta.version == v_before + 1
     gates["replication_digest_equal"] = (
+        table_digest(replica.read(spark)) == table_digest(t.read(spark))
+    )
+
+    # then a CoW MERGE updates ~1% of the source's keys, and the per-commit
+    # mode follows the source across it from the coalesced cursor
+    merge_into(spark, t, t.read(spark).sample(fraction=0.01, seed=7).withColumn("n_tok", F.col("n_tok") + 1))
+    replicate_changelog(spark, t, replica, cursor, key="doc_id")
+    gates["replication_across_merge_digest_equal"] = (
         table_digest(replica.read(spark)) == table_digest(t.read(spark))
     )
 
